@@ -526,14 +526,18 @@ def quantiles(
         # from every global query. NOTE this executes the pipeline NOW and
         # returns a sealed local-relation snapshot: re-collecting it will
         # not observe source-data changes. Pass lazy=True for a deferred
-        # plan with classic DataFrame semantics.
+        # plan with classic DataFrame semantics. The snapshot is built from
+        # an Arrow table, which Spark keeps as a LocalRelation: collecting
+        # it runs no job (a list of rows would become an RDD scan), and
+        # NaN stays NaN (a pandas frame would turn it into null).
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         schema = _finalize_schema(partials, [], q_names)
-        spark = df.sparkSession
         rows = partials.collect()
-        if not rows:
-            return spark.createDataFrame([], schema)
-        sk = merge_rows(rows)
-        return spark.createDataFrame([finalize_row(sk, {}, qs, q_names)], schema)
+        out = [finalize_row(merge_rows(rows), {}, qs, q_names)] if rows else []
+        table = pa.Table.from_pylist(out, schema=to_arrow_schema(schema))
+        return df.sparkSession.createDataFrame(table, schema)
     else:
         if merge_salt and merge_salt > 1:
             partials = _salted_pre_merge(partials, key_cols, merge_salt)

@@ -261,12 +261,18 @@ def build_payload_rollup(
     chassis (HLL, CMS, KLL, t-digest, KMV...): distinct users per hour,
     frequency sketches per day, etc., persisted once and unioned at query
     time over any range. ``make``/``update``/``from_payload`` are the same
-    plugin triple ``approx`` uses. Output: [bucket_ts, *by, payload].
+    plugin triple ``approx`` uses. Output: [bucket_ts, *by, payload], one
+    row per cell. The plan depends on the input's partition count:
 
-    Same scale shape as the DDSketch rollup: raw rows never shuffle (stage-1
-    per-task payloads keyed by cell), the exchange carries one payload row
-    per (task, cell), and cells merge via one pandas pass with singleton
-    pass-through."""
+    - fewer partitions than the default parallelism (a small or single-file
+      scan): the narrow raw rows are repartitioned by cell key, so each cell
+      is built by exactly one task. A task folds every Arrow batch of its
+      partition into one payload per cell, so these partials are already
+      the final cells and no merge stage runs.
+    - otherwise the DDSketch rollup's shape: raw rows never shuffle
+      (stage-1 per-task payloads keyed by cell), the exchange carries one
+      payload row per (task, cell), and cells merge via one pandas pass
+      with singleton pass-through."""
     from pyspark.sql import functions as F
 
     from .approx import _build_payload_partials

@@ -315,6 +315,33 @@ def test_hll_rollup_matches_direct_hll(events):
     assert got_w.equals(want_w)
 
 
+def test_payload_rollup_small_input_one_row_per_cell(spark):
+    """An input with fewer partitions than the default parallelism takes the
+    repartition-by-cell-key path, which skips the merge stage. Each task
+    must still fold all the Arrow batches of its partition into one payload
+    per cell."""
+    from ddsparkle.spark.rollup import hll_rollup
+
+    df = spark.range(2000, numPartitions=1).select(
+        F.timestamp_seconds(F.col("id") * 60).alias("ts"),
+        (F.col("id") % 3).alias("k"),
+        (F.col("id") % 50).alias("user_id"),
+    )
+    assert df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        cells = [
+            (r["bucket_ts"], r["k"])
+            for r in hll_rollup(df, "user_id", granularity="hour", by="k", p=12).collect()
+        ]
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    want = df.select(F.date_trunc("hour", "ts").alias("bucket_ts"), "k").distinct()
+    assert len(cells) == len(set(cells)) == want.count()
+    assert set(cells) == {(r["bucket_ts"], r["k"]) for r in want.collect()}
+
+
 def test_cms_rollup_window_frequencies(events, spark):
     """CMS cell union is counter-wise addition: the windowed frequency
     answer from hourly cells must equal exact windowed counts at a

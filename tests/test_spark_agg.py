@@ -68,6 +68,39 @@ def test_global_lazy_matches_eager(spark, sf_dir):
     assert lazy.asDict() == eager.asDict()
 
 
+def test_global_result_is_a_local_relation(spark):
+    """The eager global result is an Arrow-built LocalRelation: collecting
+    it runs no Spark job, NaN (a zero-weight input) and +-inf (an
+    overflowing sum) come back as they are, and an empty input gives an
+    empty frame with the same schema."""
+    from pyspark.sql import types as T
+
+    sc = spark.sparkContext
+    schema = T.StructType(
+        [T.StructField(n, T.DoubleType()) for n in ("q50", "count", "sum", "min", "max", "avg")]
+    )
+    nan = math.nan
+    cases = [
+        ([(1.0, 0.0)], [(nan, 0.0, nan, nan, nan, nan)]),
+        ([(1e308, 1.0)] * 2, [(1e308, 2.0, math.inf, 1e308, 1e308, math.inf)]),
+        ([(-1e308, 1.0)] * 2, [(-1e308, 2.0, -math.inf, -1e308, -1e308, -math.inf)]),
+        ([], []),
+    ]
+    for data, want in cases:
+        df = spark.createDataFrame(data, "v double, w double")
+        res = quantiles(df, "v", qs=(0.5,), weight_col="w", mode="grouped")
+        assert res.schema == schema
+        sc.setJobGroup("global-result-collect", "collect a global quantiles() result")
+        try:
+            rows = [tuple(r) for r in res.collect()]
+            assert sc.statusTracker().getJobIdsForGroup("global-result-collect") == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(rows) == len(want)
+        for got, exp in zip(rows, want):
+            np.testing.assert_array_equal(got, exp)  # NaN == NaN, inf == inf
+
+
 def test_grouped_quantiles_vs_exact(spark, sf_dir):
     df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     res = {
