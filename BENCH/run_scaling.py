@@ -272,9 +272,8 @@ def skew_leg(args) -> dict:
     """Hot-key scaling leg: the SAME per-conversation queries on the same
     turn total, uniform ('bench': 0.1% of convs hold 30%) vs hot-key
     ('skewed': ONE conv_id holds ~20% of ALL turns). The two-stage build
-    (per-task partial sketches -> merge by key) plus the salted pre-merge
-    (agg._salted_pre_merge) must bound the straggler: criterion is
-    max-task-time ratio (skewed / uniform) < 2x per query.
+    (per-task partial sketches -> merge by key) must bound the straggler:
+    criterion is max-task-time ratio (skewed / uniform) < 2x per query.
 
     One fresh SparkSession per (profile, query) so the REST task metrics
     attribute cleanly; wall times are same-epoch interleave-free but the

@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``queries()`` entries run the ddsparkle distributed DDSketch pipeline
-(mapInPandas partial build -> applyInPandas merge -> quantile walk) on the
+(mapInPandas partial build -> mapInPandas merge + quantile walk) on the
 driver's parquet tables; ``oracle_sql()`` entries replicate the *same
 deterministic DDSketch algorithm* in ANSI SQL (ddsparkle/oracle.py), so the
 driver's row-hash comparison verifies the distributed implementation
@@ -726,10 +726,11 @@ def q_ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_orders_price_by_cust_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """High-cardinality grouped quantiles through the vectorized 'wide'
-    finalize (one sketch per customer), oracle-verified like the rest."""
+    """High-cardinality grouped quantiles pinned to mode='kernel' (one
+    sketch per customer through the vectorized merge-and-walk finalize),
+    oracle-verified like the rest."""
     df = _t(spark, sf_dir, "orders")
-    res = quantiles(df, "o_totalprice", by="o_custkey", qs=(0.5,), config=_cfg(), mode="wide")
+    res = quantiles(df, "o_totalprice", by="o_custkey", qs=(0.5,), config=_cfg(), mode="kernel")
     return _round_result(res, ["o_custkey"], ["q50"])
 
 
@@ -1152,34 +1153,36 @@ def q_convert_mapping_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_events_by_type_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted pre-merge path (merge_salt=4): the salt bounds any single
-    merge task's per-group fan-in; associativity makes the result identical
-    — same oracle as the unsalted grouped query at these quantiles."""
+    """Low-cardinality grouped quartiles pinned to mode='kernel' (the
+    config alone would route to mode='sql'): a few event types, each merged
+    from its partial sketch rows in the vectorized finalize."""
     df = _t(spark, sf_dir, "events")
     res = quantiles(
-        df, "value", by="event_type", qs=(0.25, 0.75), config=_cfg(), merge_salt=4
+        df, "value", by="event_type", qs=(0.25, 0.75), config=_cfg(), mode="kernel"
     )
     return _round_result(res, ["event_type"], ["q25", "q75"])
 
 
 def q_orders_by_cust_shuffle_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mode='shuffle' (raw-row repartition + fused vectorized
-    build+finalize, zero sketch-row shuffle — the R~1 ultra-high-cardinality
-    physical strategy) must produce the identical DDSketch answer."""
+    """High-cardinality grouped quartiles pinned to mode='kernel' (the
+    config alone would route to mode='sql'): one sketch per customer
+    through the vectorized finalize must give the identical DDSketch
+    answer."""
     df = _t(spark, sf_dir, "orders")
     res = quantiles(
-        df, "o_totalprice", by="o_custkey", qs=(0.25, 0.75), config=_cfg(), mode="shuffle"
+        df, "o_totalprice", by="o_custkey", qs=(0.25, 0.75), config=_cfg(), mode="kernel"
     )
     return _round_result(res, ["o_custkey"], ["q25", "q75"])
 
 
 def q_orders_by_cust_sorted_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mode='sorted' (sortWithinPartitions + streaming per-batch finalize,
-    O(one-batch) task memory) must also produce the identical DDSketch
-    answer — including trailing-key carry across Arrow batch boundaries."""
+    """High-cardinality grouped q10/q90 pinned to mode='kernel' (the config
+    alone would route to mode='sql'): the tail rank walks of per-customer
+    sketches in the vectorized finalize must give the identical DDSketch
+    answer."""
     df = _t(spark, sf_dir, "orders")
     res = quantiles(
-        df, "o_totalprice", by="o_custkey", qs=(0.1, 0.9), config=_cfg(), mode="sorted"
+        df, "o_totalprice", by="o_custkey", qs=(0.1, 0.9), config=_cfg(), mode="kernel"
     )
     return _round_result(res, ["o_custkey"], ["q10", "q90"])
 

@@ -6,8 +6,8 @@ Layers:
   NumPy-vectorized sketch kernel (index mappings, bucket stores, DDSketch);
 - ``ddsparkle.serde`` — sketch <-> Spark-struct-row and binary codecs;
 - ``ddsparkle.spark`` — mergeable UDAF layer over DataFrames
-  (mapInPandas partial build, applyInPandas merge, quantile finalize) plus the
-  transcript-analytics queries;
+  (mapInPandas partial build, vectorized mapInPandas merge + quantile
+  finalize) plus the transcript-analytics queries;
 - ``ddsparkle.sketches`` — the broader mergeable-sketch family (HLL,
   count-min, Bloom, ...) reusing the same aggregation chassis;
 - ``ddsparkle.transcripts`` — deterministic synthetic transcript tables.

@@ -7,10 +7,11 @@ grouped-map pandas UDFs):
 
 1. stage 1 — ``mapInPandas`` over the scan partitions builds one sketch per
    (task, group key): only *sketch rows* (a few KB each) ever shuffle;
-2. stage 2 — ``groupBy(keys).applyInPandas`` merges sketch rows per key and
-   finalizes quantiles;
-3. a global aggregation uses a constant key, optionally with an intermediate
-   tree-merge stage so no single task ever folds more than ~fan-in rows.
+2. stage 2 — ``repartition(keys)`` plus one ``mapInPandas`` merges the
+   sketch rows and finalizes quantiles for every key of a partition in one
+   vectorized pass;
+3. a global aggregation folds its partial rows on the driver, after an
+   intermediate tree-merge stage when there are more than ~fan-in of them.
 """
 
 from .agg import (

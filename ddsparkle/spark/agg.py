@@ -4,15 +4,17 @@ The sketch is a distributive aggregate (partial = per-partition build, merge =
 store add, final = rank walk — ``DDSketch.java:218-229,268-273,353-388``),
 expressed here as a two-stage Arrow-vectorized pipeline:
 
-    stage 1  df.mapInPandas(build)         — no shuffle; one sketch row per
-                                             (task, group); pure NumPy inside
-    stage 2  groupBy(keys).applyInPandas   — shuffles only sketch rows;
-             (merge + finalize)              per-key fold + quantile walk
+    stage 1  df.mapInPandas(build)          — no shuffle; one sketch row per
+                                              (task, group); pure NumPy inside
+    stage 2  repartition(keys).mapInPandas  — shuffles only sketch rows; every
+             (merge + finalize)               group of a partition merges and
+                                              rank-walks in one vectorized pass
 
-For global aggregations the group key is a constant; an optional intermediate
-tree stage bounds the fan-in of the final merge task. All per-row work
-(value derivation, filters) should be done with Catalyst expressions *before*
-calling these functions so pushdown/pruning apply to the scan.
+For global aggregations stage 2 runs on the driver instead, over the
+collected partial rows; an intermediate tree stage bounds how many rows it
+folds. All per-row work (value derivation, filters) should be done with
+Catalyst expressions *before* calling these functions so pushdown/pruning
+apply to the scan.
 """
 
 from __future__ import annotations
@@ -399,6 +401,12 @@ def _finalize_schema(src, key_cols: Sequence[str], q_names: Sequence[str]):
     return T.StructType(key_fields + stat_fields)
 
 
+# Above this many stage-1 partitions, a global kernel aggregation first folds
+# its partial rows in ~isqrt(#partitions) tasks, so the driver finalize folds
+# at most ~max(_TREE_FANIN, isqrt(#partitions)) rows.
+_TREE_FANIN = 4096
+
+
 def quantiles(
     df,
     value_col: str,
@@ -407,10 +415,7 @@ def quantiles(
     config: Optional[SketchConfig] = None,
     weight_col: Optional[str] = None,
     q_names: Optional[Sequence[str]] = None,
-    tree_fanin: int = 4096,
-    merge_salt: Optional[int] = None,
     mode: str = "auto",
-    lazy: bool = False,
 ):
     """Sketch-based quantiles of ``value_col``, optionally grouped by ``by``.
 
@@ -420,75 +425,36 @@ def quantiles(
     also clamped into [min, max] — matching the reference's
     ``DDSketchWithExactSummaryStatistics``.
 
-    Scale notes: raw rows never shuffle — stage 1 reduces each task to one
-    sketch row per group. A global aggregation (by=None) whose stage-1 output
-    exceeds ``tree_fanin`` rows gets an intermediate tree-merge stage so the
-    final task folds at most ~tree_fanin sketch rows; the final fold then
-    runs on the driver and the call RETURNS AN ALREADY-EXECUTED local
-    result (``lazy=True`` restores a deferred plan — see the global branch
-    below). For grouped
-    aggregations on very wide scans (#tasks so large that one group's partial
-    rows overwhelm a single merge task), ``merge_salt=S`` inserts a salted
-    pre-merge — groupBy(keys, salt) with S deterministic salt buckets — so
-    each final task folds at most S rows per group. Merge associativity makes
-    any salt assignment produce identical results (tested).
-
-    ``mode``: choose by the ratio rows-per-group-per-task R:
+    ``mode``:
     - 'sql' (the 'auto' default for log-mapping configs): the whole
       aggregation as a pure-Catalyst plan — hash aggregate on (keys, sign,
       bucket index) with map-side combine, per-group window cumsum walk.
       Zero Python stages; the shuffle carries bucket rows (≤ #groups ×
       ~900 buckets at α=0.01) no matter the input size. Requires
-      mapping_kind='log' (closed-form index math); other mappings and
-      custom finalizes use the kernel paths below. ``merge_salt``,
-      ``tree_fanin`` and ``lazy`` are no-ops for this mode (there is no
-      Python merge stage to bound, and the plan is always lazy).
-    - 'wide' (the 'auto' default for grouped aggs on non-log mappings):
-      partial sketches per
-      task, then ONE vectorized finalize pass per partition of sketch rows.
-      Same shuffle shape as 'grouped' (only sketch rows move) but the
-      finalize is a single segmented-cumsum pass instead of one pandas
-      apply per key — faster at EVERY cardinality (measured: 5 groups
-      0.69s -> 0.60s, 1500 groups 73s -> 1.8s at sf0.1).
-    - 'grouped': partial sketches per task, then ``applyInPandas`` per key.
-      Kept for per-key custom finalizes and as the parity reference.
-    - 'shuffle': repartition the RAW (key, value) rows by key once, then a
-      fused vectorized build+finalize in a single ``mapInPandas`` pass — no
-      sketch-row shuffle at all. Right when R ~ 1 (ultra-high cardinality,
-      tiny groups), where partial sketch rows would be FATTER than the raw
-      rows they summarize. (It also wins on small benchmarks at ANY
-      cardinality because it has one fewer Python stage — but shuffling raw
-      rows by a low-cardinality key is exactly the plan that dies at 100 TB,
-      so it is never auto-selected.) Task memory is O(groups per partition).
-    - 'sorted': like 'shuffle' plus sortWithinPartitions(keys) and a
-      STREAMING finalize — completed keys emit per Arrow batch, only the
-      trailing key carries over, task memory O(one batch). The variant for
-      group counts so extreme that even one retained sketch row per group
-      per task is too much; pays Spark's (spill-safe) sort for it.
+      mapping_kind='log' (closed-form index math).
+    - 'kernel' (the 'auto' default otherwise): partial sketches per task
+      (raw rows never shuffle), then ``finalize_sketch_rows`` — one
+      vectorized merge-and-walk pass per partition of sketch rows. A global
+      aggregation (by=None) folds its partials on the driver instead: it
+      RETURNS AN ALREADY-EXECUTED local result, and re-collecting it will
+      not observe source-data changes.
     """
     config = config or SketchConfig()
     key_cols = [by] if isinstance(by, str) else list(by or [])
-    if mode not in ("auto", "grouped", "wide", "shuffle", "sorted", "sql"):
-        raise ValueError(
-            f"unknown mode {mode!r}; one of auto|grouped|wide|shuffle|sorted|sql"
-        )
-    if mode in ("wide", "shuffle", "sorted") and not key_cols:
-        raise ValueError(f"mode={mode!r} requires a group key (by=...)")
+    if mode not in ("auto", "kernel", "sql"):
+        raise ValueError(f"unknown mode {mode!r}; one of auto|kernel|sql")
     if mode == "auto":
         # the log mapping's index math is closed-form in SQL, so the whole
         # aggregation can stay inside whole-stage codegen with map-side
         # partial aggregation — strictly better than any Python-stage plan
-        # (validated hash-identical vs the kernel paths across the driver
-        # suite; see _catalyst_quantiles). Interpolated mappings need frexp
+        # (validated hash-identical vs the kernel path across the oracle
+        # gate suite; see _catalyst_quantiles). Interpolated mappings need frexp
         # bit access, so they keep the Arrow-vectorized kernel path.
-        if sql_mode_eligible(config, stats_final=True):
-            mode = "sql"
-        else:
-            mode = "wide" if key_cols else "grouped"
+        mode = "sql" if sql_mode_eligible(config, stats_final=True) else "kernel"
     qs = [float(q) for q in qs]
     if any(not 0.0 <= q <= 1.0 for q in qs):
         # uniform early guard (DDSketch.java:355-361 throws IAE); the kernel
-        # paths would raise at finalize time, the sql path not at all
+        # path would raise at finalize time, the sql path not at all
         raise ValueError("The quantile must be between 0 and 1.")
     if q_names is None:
         q_names = [quantile_column_name(q) for q in qs]
@@ -499,76 +465,35 @@ def quantiles(
             df, value_col, key_cols, qs, q_names, config, weight_col
         )
 
-    if mode == "shuffle":
-        return _shuffle_fused_quantiles(
-            df, value_col, key_cols, qs, q_names, config, weight_col
-        )
-    if mode == "sorted":
-        return _sorted_fused_quantiles(
-            df, value_col, key_cols, qs, q_names, config, weight_col
-        )
-
     partials = build_partial_sketches(df, value_col, key_cols, config, weight_col)
+    if key_cols:
+        return finalize_sketch_rows(partials, key_cols, qs, q_names)
 
-    if not key_cols:
-        n_parts = partials.rdd.getNumPartitions()
-        if n_parts > tree_fanin:
-            # intermediate tree level: bound final fan-in
-            partials = partials.repartition(max(1, math.isqrt(n_parts)))
-            partials = merge_partials_within_partitions(partials, [])
-        if lazy:
-            src = partials.withColumn("__g", _lit0())
-            return finalize_sketch_rows(src, ["__g"], qs, q_names).drop("__g")
-        # bounded driver finalize (the default): the tree level caps the
-        # surviving partial rows at ~max(tree_fanin, isqrt(#tasks)), the
-        # same fan-in the final merge task would fold — doing that fold on
-        # the driver removes a whole single-task shuffle + Python stage
-        # from every global query. NOTE this executes the pipeline NOW and
-        # returns a sealed local-relation snapshot: re-collecting it will
-        # not observe source-data changes. Pass lazy=True for a deferred
-        # plan with classic DataFrame semantics. The snapshot is built from
-        # an Arrow table, which Spark keeps as a LocalRelation: collecting
-        # it runs no job (a list of rows would become an RDD scan), and
-        # NaN stays NaN (a pandas frame would turn it into null).
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
+    n_parts = partials.rdd.getNumPartitions()
+    if n_parts > _TREE_FANIN:
+        # intermediate tree level: bound the driver's fan-in
+        partials = partials.repartition(max(1, math.isqrt(n_parts)))
+        partials = merge_partials_within_partitions(partials, [])
+    # driver finalize: the fold a single final merge task would do, without
+    # its shuffle and Python stage. The snapshot is built from an Arrow
+    # table, which Spark keeps as a LocalRelation: collecting it runs no
+    # job (a list of rows would become an RDD scan), and NaN stays NaN (a
+    # pandas frame would turn it into null).
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-        schema = _finalize_schema(partials, [], q_names)
-        rows = partials.collect()
-        out = [finalize_row(merge_rows(rows), {}, qs, q_names)] if rows else []
-        table = pa.Table.from_pylist(out, schema=to_arrow_schema(schema))
-        return df.sparkSession.createDataFrame(table, schema)
-    else:
-        if merge_salt and merge_salt > 1:
-            partials = _salted_pre_merge(partials, key_cols, merge_salt)
-        src = partials
-        group_keys = key_cols
-
-    if mode == "wide" and key_cols:
-        # all partials of a key land in one partition; every group of the
-        # partition finalizes in ONE vectorized pass (segmented cumsum +
-        # global searchsorted), so per-group Python cost is ~zero
-        schema = _finalize_schema(src, group_keys, q_names)
-        parted = src.repartition(*[src[c] for c in group_keys])
-        out_cols = group_keys + q_names + ["count", "sum", "min", "max", "avg"]
-
-        def finalize_wide(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            pdfs = [p for p in batches if len(p)]
-            if not pdfs:
-                yield pd.DataFrame({c: pd.Series([], dtype=object) for c in out_cols})
-                return
-            yield _vectorized_grouped_finalize(
-                pd.concat(pdfs, ignore_index=True), group_keys, qs, q_names, out_cols
-            )
-
-        return parted.mapInPandas(finalize_wide, schema=schema)
-
-    return finalize_sketch_rows(src, group_keys, qs, q_names)
+    schema = _finalize_schema(partials, [], q_names)
+    rows = partials.collect()
+    out = [finalize_row(merge_rows(rows), {}, qs, q_names)] if rows else []
+    table = pa.Table.from_pylist(out, schema=to_arrow_schema(schema))
+    return df.sparkSession.createDataFrame(table, schema)
 
 
 def finalize_row(sk, key_values: dict, qs: Sequence[float], q_names: Sequence[str]) -> dict:
-    """One result row from a merged sketch: the shared contract for every
-    finalize path (quantiles(), jobs.finalize_from_checkpoint)."""
+    """One result row from a merged sketch: the global driver finalize of
+    ``quantiles``, and the scalar reference for ``finalize_sketch_rows``'
+    vectorized pass (equal quantiles, count, min and max; sum and avg up to
+    float reassociation)."""
     row = dict(key_values)
     if sk is None or sk.count == 0:
         for name in q_names:
@@ -589,33 +514,32 @@ def finalize_row(sk, key_values: dict, qs: Sequence[float], q_names: Sequence[st
 
 
 def finalize_sketch_rows(src, group_keys: Sequence[str], qs: Sequence[float], q_names: Sequence[str]):
-    """applyInPandas merge+finalize of sketch rows grouped by ``group_keys``."""
+    """Merge + finalize sketch rows per ``group_keys`` (all rows when empty):
+    repartition by the keys, then ONE ``mapInPandas`` pass in which every
+    group of a partition merges and rank-walks at once (segmented cumsum +
+    global searchsorted), so per-group Python cost is ~zero. Returns
+    ``[*group_keys, *q_names, count, sum, min, max, avg]``."""
     group_keys = list(group_keys)
-    schema = _finalize_schema(src, group_keys, q_names)
+    if not group_keys:
+        src = src.withColumn("__g", _lit0())
+        return finalize_sketch_rows(src, ["__g"], qs, q_names).drop("__g")
     qs = [float(q) for q in qs]
     q_names = list(q_names)
+    src = src.select(*group_keys, *SKETCH_ROW_FIELDS)
+    schema = _finalize_schema(src, group_keys, q_names)
+    out_cols = group_keys + q_names + ["count", "sum", "min", "max", "avg"]
 
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = merge_rows(pdf[SKETCH_ROW_FIELDS].iloc[i] for i in range(len(pdf)))
-        return pd.DataFrame(
-            [finalize_row(sk, {c: pdf[c].iloc[0] for c in group_keys}, qs, q_names)]
+    def finalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pdfs = [p for p in batches if len(p)]
+        if not pdfs:
+            yield pd.DataFrame({c: pd.Series([], dtype=object) for c in out_cols})
+            return
+        yield _vectorized_grouped_finalize(
+            pd.concat(pdfs, ignore_index=True), group_keys, qs, q_names, out_cols
         )
 
-    return src.groupBy(*group_keys).applyInPandas(finalize, schema=schema)
-
-
-def _salted_pre_merge(partials, key_cols: Sequence[str], n_salt: int):
-    """Salted tree level for grouped merges: assign each partial row a
-    deterministic salt bucket and merge within (keys, salt) first. The salt
-    value assignment is irrelevant to correctness (merge is associative and
-    commutative); it only bounds the final per-group fan-in to n_salt."""
-    from pyspark.sql import functions as F
-
-    salted = partials.withColumn(
-        "__salt", F.pmod(F.monotonically_increasing_id(), F.lit(n_salt)).cast("int")
-    )
-    merged = merge_partials_to_sketch_rows(salted, [*key_cols, "__salt"])
-    return merged.drop("__salt")
+    parted = src.repartition(*[src[c] for c in group_keys])
+    return parted.mapInPandas(finalize, schema=schema)
 
 
 def merge_partials_within_partitions(partials, key_cols: Sequence[str]):
@@ -1332,98 +1256,6 @@ def trimmed_means(
             yield pd.DataFrame(rows, columns=out_cols)
 
     return merged.mapInPandas(fin, schema=schema)
-
-
-def _sorted_fused_quantiles(df, value_col, key_cols, qs, q_names, config, weight_col):
-    """mode='sorted': repartition by key + sortWithinPartitions, then a
-    STREAMING fused build+finalize — each Arrow batch's completed keys
-    finalize immediately and only the partition's trailing key carries over
-    to the next batch, so task memory is O(one batch + one group) no matter
-    how many distinct groups the partition holds. This removes mode=
-    'shuffle''s O(groups-per-partition) retained-frame footprint at the
-    cost of Spark's (disk-backed, spill-safe) sort. Right for 10^8-10^9
-    groups per partition where even one sketch row per group is too much."""
-    cols = list(key_cols) + [value_col] + ([weight_col] if weight_col else [])
-    projected = (
-        df.select(*cols).repartition(*key_cols).sortWithinPartitions(*key_cols)
-    )
-    out_cols = list(key_cols) + list(q_names) + ["count", "sum", "min", "max", "avg"]
-    schema = _finalize_schema(projected, key_cols, q_names)
-    builder = _make_grouped_builder(config, list(key_cols), value_col, weight_col, 2_000_000)
-
-    def _compact(rows: pd.DataFrame) -> pd.DataFrame:
-        """Merge a trailing key's partial rows down to ONE row, so a hot key
-        spanning B Arrow batches carries O(1) state, not O(B) rows."""
-        if len(rows) <= 1:
-            return rows
-        sk = merge_rows(rows[SKETCH_ROW_FIELDS].iloc[i] for i in range(len(rows)))
-        row = {k: rows.iloc[0][k] for k in key_cols}
-        row.update(sketch_to_row(sk))
-        for f in ("neg_idx", "neg_cnt", "pos_idx", "pos_cnt"):
-            row[f] = row[f].tolist()
-        return pd.DataFrame([row], columns=list(key_cols) + SKETCH_ROW_FIELDS)
-
-    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: Optional[pd.DataFrame] = None  # trailing key's ONE partial row
-        saw_any = False
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            saw_any = True
-            # one frame of sketch rows for THIS batch (keys sorted, so the
-            # frame's row order is sorted first-seen order)
-            frames = [f for f in builder(iter([pdf])) if len(f)]
-            if not frames:
-                continue
-            frame = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-            if carry is not None:
-                frame = pd.concat([carry, frame], ignore_index=True)
-            # rows sharing the trailing key may still continue into the next
-            # batch; everything before the last key is complete
-            last_key = tuple(frame.iloc[-1][k] for k in key_cols)
-            is_last = pd.Series(True, index=frame.index)
-            for k, v in zip(key_cols, last_key):
-                is_last &= frame[k].eq(v) | (frame[k].isna() & pd.isna(v))
-            done = frame[~is_last]
-            carry = _compact(frame[is_last].reset_index(drop=True))
-            if len(done):
-                yield _vectorized_grouped_finalize(
-                    done.reset_index(drop=True), list(key_cols), qs, q_names, out_cols
-                )
-        if carry is not None and len(carry):
-            yield _vectorized_grouped_finalize(carry, list(key_cols), qs, q_names, out_cols)
-        elif not saw_any:
-            yield pd.DataFrame({c: pd.Series([], dtype=object) for c in out_cols})
-
-    return projected.mapInPandas(fused, schema=schema)
-
-
-def _shuffle_fused_quantiles(df, value_col, key_cols, qs, q_names, config, weight_col):
-    """mode='shuffle': one raw-row repartition by key, then vectorized
-    build + finalize fused in a single mapInPandas pass per partition (all
-    of a key's rows are co-located, so no merge stage exists at all)."""
-    cols = list(key_cols) + [value_col] + ([weight_col] if weight_col else [])
-    projected = df.select(*cols).repartition(*key_cols)
-    out_cols = list(key_cols) + list(q_names) + ["count", "sum", "min", "max", "avg"]
-    schema = _finalize_schema(projected, key_cols, q_names)
-    # flush every ~2M groups: keeps the packed-key id space far below its
-    # 2^29 cap and bounds the builder's in-flight dictionaries. NOTE: the
-    # flushed sketch-row frames are all retained until the final vectorized
-    # finalize, so task memory is O(distinct groups in the partition) — size
-    # the repartition so groups-per-partition stays in the tens of millions
-    # at most (sketch rows for tiny groups are ~100 B each)
-    builder = _make_grouped_builder(config, list(key_cols), value_col, weight_col, 2_000_000)
-
-    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames = [f for f in builder(batches) if len(f)]
-        if not frames:
-            yield pd.DataFrame({c: pd.Series([], dtype=object) for c in out_cols})
-            return
-        yield _vectorized_grouped_finalize(
-            pd.concat(frames, ignore_index=True), list(key_cols), qs, q_names, out_cols
-        )
-
-    return projected.mapInPandas(fused, schema=schema)
 
 
 def _catalyst_quantiles(df, value_col, key_cols, qs, q_names, config, weight_col):

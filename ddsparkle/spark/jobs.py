@@ -36,7 +36,7 @@ import time
 from typing import Optional, Sequence
 
 from ..config import SketchConfig
-from .agg import build_partial_sketches, quantile_column_name
+from .agg import build_partial_sketches, finalize_sketch_rows, quantile_column_name
 
 __all__ = ["build_with_checkpoint", "finalize_from_checkpoint", "run_job"]
 
@@ -143,17 +143,10 @@ def finalize_from_checkpoint(
 ):
     """Merge all checkpointed sketch rows per group -> quantiles DataFrame
     (same output contract as agg.quantiles via the shared finalize)."""
-    from pyspark.sql import functions as F
-
-    from .agg import finalize_sketch_rows
-
     keys = [by] if isinstance(by, str) else list(by or [])
     ck = spark.read.parquet(checkpoint)
     q_names = [quantile_column_name(q) for q in qs]
-    src = ck if keys else ck.withColumn("__g", F.lit(0))
-    group_keys = keys or ["__g"]
-    out = finalize_sketch_rows(src, group_keys, qs, q_names)
-    return out.drop("__g") if not keys else out
+    return finalize_sketch_rows(ck, keys, qs, q_names)
 
 
 def run_job(args) -> dict:

@@ -660,8 +660,6 @@ def rollup_quantiles(
     rows), so the result equals running the aggregation directly on the raw
     rows of the range — the property the driver oracle checks.
     """
-    from pyspark.sql import functions as F
-
     key_cols = [by] if isinstance(by, str) else list(by or [])
     qs = [float(q) for q in qs]
     if q_names is None:
@@ -672,16 +670,7 @@ def rollup_quantiles(
     # a tz mismatch. One spare day-partition read is noise; a dropped cell
     # is a wrong quantile. Exact selection stays on bucket_ts.
     sel = _apply_time_filter(rollup, start, end)
-    drop = [
-        c
-        for c in (BUCKET_COL, DAY_COL, BATCH_COL)
-        if c in sel.columns and c not in key_cols
-    ]
-    sel = sel.drop(*drop)
-    if key_cols:
-        return finalize_sketch_rows(sel, key_cols, qs, list(q_names))
-    src = sel.withColumn("__g", F.lit(0))
-    return finalize_sketch_rows(src, ["__g"], qs, list(q_names)).drop("__g")
+    return finalize_sketch_rows(sel, key_cols, qs, list(q_names))
 
 
 def rollup_anomaly_flags(

@@ -48,10 +48,10 @@ def test_stage1_reads_no_extra_columns(spark, sf_dir):
 
 def test_full_query_single_shuffle_of_sketch_rows(spark, sf_dir):
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    res = quantiles(df, "value", by="event_type", qs=(0.5,), mode="wide")
+    res = quantiles(df, "value", by="event_type", qs=(0.5,), mode="kernel")
     plan = plan_of(res)
     # exactly one exchange in the tree: the sketch-row shuffle before the
-    # wide vectorized finalize
+    # vectorized finalize
     assert plan.count("+- Exchange") == 1, plan
     # build stage below the exchange, finalize stage above it: two
     # MapInPandas operators (each printed in tree + detail section)
@@ -102,14 +102,41 @@ def test_auto_mode_routes_log_to_sql_and_cubic_to_kernel(spark, sf_dir):
     assert "MapInPandas" in plan_of(grouped)
 
 
-def test_grouped_mode_plan_shape(spark, sf_dir):
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    res = quantiles(df, "value", by="event_type", qs=(0.5,), mode="grouped")
-    plan = plan_of(res)
+def assert_one_finalize_over_one_exchange(plan: str):
+    """A sketch-row finalize: one MapInPandas directly above the plan's only
+    Exchange (each operator prints in the tree and in the detail section),
+    and no grouped-map Python operator."""
     assert plan.count("+- Exchange") == 1, plan
-    assert "FlatMapGroupsInPandas" in plan
-    # and the exchange sits ABOVE MapInPandas (raw rows built before shuffle)
-    assert plan.index("MapInPandas") > plan.index("+- Exchange")
+    assert plan.count("MapInPandas") == 2, plan
+    assert plan.index("MapInPandas") < plan.index("+- Exchange"), plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+
+
+def test_stored_sketch_finalize_plan_shape(spark, sf_dir, tmp_path):
+    """rollup_quantiles (global and by key) and finalize_from_checkpoint
+    read stored sketch rows and finalize them in the same vectorized pass
+    as quantiles(mode='kernel')."""
+    from ddsparkle.config import SketchConfig
+    from ddsparkle.spark.jobs import finalize_from_checkpoint
+    from ddsparkle.spark.rollup import (
+        build_rollup,
+        read_rollup,
+        rollup_quantiles,
+        write_rollup,
+    )
+
+    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    cfg = SketchConfig(track_exact_stats=False)
+    write_rollup(build_rollup(df, "value", by="event_type", config=cfg), str(tmp_path / "roll"))
+    roll = read_rollup(spark, str(tmp_path / "roll"))
+    build_partial_sketches(df, "value", ["event_type"], cfg).write.parquet(str(tmp_path / "ck"))
+    for res in (
+        rollup_quantiles(roll, (0.5,)),
+        rollup_quantiles(roll, (0.5,), by="event_type"),
+        finalize_from_checkpoint(spark, str(tmp_path / "ck")),
+        finalize_from_checkpoint(spark, str(tmp_path / "ck"), by="event_type"),
+    ):
+        assert_one_finalize_over_one_exchange(plan_of(res))
 
 
 def test_length_projection_stays_jvm_side(spark, sf_dir):

@@ -72,7 +72,7 @@ def test_rollup_global_and_regroup(events):
     # merging across the dimension is the same associative fold
     roll = build_rollup(events, "value", time_col="ts", granularity="day", by="event_type")
     res = rollup_quantiles(roll, QS)
-    direct = quantiles(events, "value", qs=QS, lazy=True)
+    direct = quantiles(events, "value", qs=QS)
     assert_matches_direct(res, direct)
 
 

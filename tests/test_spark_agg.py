@@ -11,6 +11,7 @@ import pytest
 from ddsparkle.config import SketchConfig, logarithmic_unbounded_dense
 from ddsparkle.spark.agg import (
     build_partial_sketches,
+    finalize_row,
     merge_partials_to_sketch_rows,
     quantile_column_name,
     quantiles,
@@ -21,6 +22,40 @@ pytestmark = pytest.mark.spark
 
 ALPHA = 0.01
 EPS = 1e-10
+
+
+def scalar_finalize(partials, key_cols, qs):
+    """Reference answer: ``finalize_row(merge_rows(...))`` per key over the
+    collected partial sketch rows."""
+    q_names = [quantile_column_name(q) for q in qs]
+    groups: dict = {}
+    for r in partials.collect():
+        groups.setdefault(tuple(r[c] for c in key_cols), []).append(r)
+    return {
+        k: finalize_row(merge_rows(rows), dict(zip(key_cols, k)), qs, q_names)
+        for k, rows in groups.items()
+    }
+
+
+def assert_kernel_matches_scalar(df, value_col, key_cols, qs, cfg=None):
+    """mode='kernel' equals the scalar reference exactly on quantiles,
+    count, min and max; sum/avg only to float reassociation (the scalar
+    merge is a Kahan fold, the vectorized one a plain segmented sum).
+    NaN (an all-NULL group) counts as equal to NaN."""
+    cfg = cfg or SketchConfig()
+    got = {
+        tuple(r[c] for c in key_cols): r.asDict()
+        for r in quantiles(df, value_col, by=key_cols, qs=qs, config=cfg, mode="kernel").collect()
+    }
+    want = scalar_finalize(build_partial_sketches(df, value_col, key_cols, cfg), key_cols, qs)
+    assert set(got) == set(want)
+    exact = [quantile_column_name(q) for q in qs] + ["count", "min", "max"]
+    for k, w in want.items():
+        g = got[k]
+        np.testing.assert_array_equal([g[c] for c in exact], [w[c] for c in exact], err_msg=str(k))
+        for c in ("sum", "avg"):
+            assert g[c] == pytest.approx(w[c], rel=1e-9, nan_ok=True), (k, c)
+    return got
 
 
 def rank_interval_error(sorted_vals, q, actual):
@@ -55,19 +90,6 @@ def test_global_quantiles_vs_exact(spark, sf_dir):
     assert res["sum"] == pytest.approx(math.fsum(vals), rel=1e-9)
 
 
-def test_global_lazy_matches_eager(spark, sf_dir):
-    """lazy=True returns a deferred plan (shuffle-based finalize) with the
-    SAME result as the default eager driver finalize."""
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    eager = quantiles(df, "value", qs=(0.5, 0.95)).collect()[0]
-    lazy_df = quantiles(df, "value", qs=(0.5, 0.95), lazy=True)
-    # deferred: the plan still contains the pipeline, not a sealed snapshot
-    plan = lazy_df._jdf.queryExecution().optimizedPlan().toString()
-    assert "LocalRelation" not in plan and "MapInPandas" in plan
-    lazy = lazy_df.collect()[0]
-    assert lazy.asDict() == eager.asDict()
-
-
 def test_global_result_is_a_local_relation(spark):
     """The eager global result is an Arrow-built LocalRelation: collecting
     it runs no Spark job, NaN (a zero-weight input) and +-inf (an
@@ -88,7 +110,7 @@ def test_global_result_is_a_local_relation(spark):
     ]
     for data, want in cases:
         df = spark.createDataFrame(data, "v double, w double")
-        res = quantiles(df, "v", qs=(0.5,), weight_col="w", mode="grouped")
+        res = quantiles(df, "v", qs=(0.5,), weight_col="w", mode="kernel")
         assert res.schema == schema
         sc.setJobGroup("global-result-collect", "collect a global quantiles() result")
         try:
@@ -99,6 +121,43 @@ def test_global_result_is_a_local_relation(spark):
         assert len(rows) == len(want)
         for got, exp in zip(rows, want):
             np.testing.assert_array_equal(got, exp)  # NaN == NaN, inf == inf
+
+
+def test_global_tree_level_matches_driver_fold(spark, monkeypatch):
+    """Above _TREE_FANIN stage-1 partitions a global kernel aggregation
+    folds its partials in ~isqrt(#partitions) tasks before the driver
+    finalize. With the fan-in at 2, a 9-partition input takes that path
+    (3 tree tasks), and the answer equals the untreed driver fold exactly."""
+    from pyspark.sql import functions as F
+
+    from ddsparkle.spark import agg
+
+    df = spark.range(5000).select(
+        ((F.col("id") * 7919) % 1013 - 300).cast("double").alias("v")
+    ).repartition(9)
+    qs = (0.1, 0.5, 0.99)
+    want = scalar_finalize(build_partial_sketches(df, "v"), [], qs)[()]
+    tree_parts = []
+    fold = agg.merge_partials_within_partitions
+
+    def spy(partials, key_cols):
+        tree_parts.append(partials.rdd.getNumPartitions())
+        return fold(partials, key_cols)
+
+    monkeypatch.setattr(agg, "merge_partials_within_partitions", spy)
+    monkeypatch.setattr(agg, "_TREE_FANIN", 2)
+    got = quantiles(df, "v", qs=qs, mode="kernel").collect()
+    assert tree_parts == [3]
+    assert [r.asDict() for r in got] == [want]
+
+
+def test_removed_mode_names_raise(spark):
+    from pyspark.sql import functions as F
+
+    df = spark.range(3).select(F.lit("a").alias("k"), F.col("id").cast("double").alias("v"))
+    for mode in ("wide", "grouped", "shuffle", "sorted"):
+        with pytest.raises(ValueError, match=r"auto\|kernel\|sql"):
+            quantiles(df, "v", by="k", mode=mode)
 
 
 def test_grouped_quantiles_vs_exact(spark, sf_dir):
@@ -221,42 +280,12 @@ def merge_rows_df(spark, partials):
     return merge_partials_to_sketch_rows(partials, ["o_custkey"]).collect()
 
 
-def test_salted_pre_merge_same_results(spark, sf_dir):
-    """merge_salt bounds per-group fan-in; any salt assignment yields
-    identical results (merge associativity/commutativity)."""
-    df = spark.read.parquet(f"{sf_dir}/lineitem.parquet").repartition(9)
-    plain = {
-        r["l_returnflag"]: r
-        for r in quantiles(df, "l_extendedprice", by="l_returnflag", qs=(0.5, 0.99)).collect()
-    }
-    salted = {
-        r["l_returnflag"]: r
-        for r in quantiles(
-            df, "l_extendedprice", by="l_returnflag", qs=(0.5, 0.99), merge_salt=4
-        ).collect()
-    }
-    assert set(plain) == set(salted)
-    for k in plain:
-        for c in ("q50", "q99", "count", "min", "max"):
-            assert plain[k][c] == pytest.approx(salted[k][c], rel=1e-12)
-
-
 def test_wide_mode_matches_grouped(spark, sf_dir):
-    """High-cardinality finalize path: mode='wide' (repartition + in-batch
-    fold) must produce the same rows as the applyInPandas path."""
+    """High-cardinality grouped finalize: mode='kernel' (repartition + one
+    vectorized merge-and-walk pass) must equal the scalar per-key fold."""
     df = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    a = {
-        r["o_custkey"]: r
-        for r in quantiles(df, "o_totalprice", by="o_custkey", qs=(0.5,)).collect()
-    }
-    b = {
-        r["o_custkey"]: r
-        for r in quantiles(df, "o_totalprice", by="o_custkey", qs=(0.5,), mode="wide").collect()
-    }
-    assert set(a) == set(b) and len(a) > 100
-    for k in a:
-        for c in ("q50", "count", "min", "max"):
-            assert a[k][c] == pytest.approx(b[k][c], rel=1e-12)
+    got = assert_kernel_matches_scalar(df, "o_totalprice", ["o_custkey"], (0.5,))
+    assert len(got) > 100
 
 
 @pytest.mark.parametrize(
@@ -270,8 +299,8 @@ def test_wide_mode_matches_grouped(spark, sf_dir):
     ids=["exact-stats", "no-stats-cubic", "collapse-low", "collapse-high"],
 )
 def test_wide_finalize_parity_matrix(spark, cfg):
-    """The vectorized wide finalize must agree with the scalar applyInPandas
-    path across configs, mixed signs, and zeros."""
+    """The vectorized kernel finalize must agree with the scalar per-key
+    fold across configs, mixed signs, and zeros."""
     from pyspark.sql import functions as F
 
     df = (
@@ -284,17 +313,8 @@ def test_wide_finalize_parity_matrix(spark, cfg):
         )
         .repartition(7)
     )
-    a = {r["k"]: r for r in quantiles(df, "v", by="k", qs=(0.1, 0.5, 0.9), config=cfg).collect()}
-    b = {
-        r["k"]: r
-        for r in quantiles(df, "v", by="k", qs=(0.1, 0.5, 0.9), config=cfg, mode="wide").collect()
-    }
-    assert set(a) == set(b) and len(a) == 97
-    for k in a:
-        for c in ("q10", "q50", "q90", "count", "min", "max"):
-            av, bv = a[k][c], b[k][c]
-            assert av == pytest.approx(bv, rel=1e-12), (k, c, av, bv)
-        assert a[k]["sum"] == pytest.approx(b[k]["sum"], rel=1e-9)
+    got = assert_kernel_matches_scalar(df, "v", ["k"], (0.1, 0.5, 0.9), cfg)
+    assert len(got) == 97
 
 
 def test_relative_error_beats_native_approx_percentile_on_tails(spark):
@@ -370,93 +390,47 @@ def test_convert_sketch_rows_spark(spark, sf_dir):
 
 
 def test_composite_group_keys(spark, sf_dir):
-    """Multi-column by: the vectorized builder's MultiIndex factorize path
-    and both finalize modes."""
+    """Multi-column by: the MultiIndex factorize paths of the vectorized
+    builder and finalize."""
     df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     keys = ["l_returnflag", "l_linestatus"]
-    res = {
-        (r["l_returnflag"], r["l_linestatus"]): r
-        for r in quantiles(df, "l_extendedprice", by=keys, qs=(0.5,)).collect()
-    }
+    res = assert_kernel_matches_scalar(df, "l_extendedprice", keys, (0.5,))
     pdf = df.select(*keys, "l_extendedprice").toPandas()
     truth = pdf.groupby(keys)["l_extendedprice"]
     assert set(res) == set(truth.groups)
     for key, grp in truth:
         assert res[key]["count"] == len(grp)
         assert res[key]["min"] == grp.min() and res[key]["max"] == grp.max()
-    wide = {
-        (r["l_returnflag"], r["l_linestatus"]): r
-        for r in quantiles(df, "l_extendedprice", by=keys, qs=(0.5,), mode="wide").collect()
-    }
-    for k in res:
-        assert wide[k]["q50"] == pytest.approx(res[k]["q50"], rel=1e-12)
-        assert wide[k]["count"] == res[k]["count"]
-
-
-def test_shuffle_mode_matches_grouped(spark, sf_dir):
-    """mode='shuffle' (raw repartition + fused build/finalize) must agree
-    with the partial-sketch paths."""
-    df = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    a = {
-        r["o_custkey"]: r
-        for r in quantiles(df, "o_totalprice", by="o_custkey", qs=(0.5, 0.99)).collect()
-    }
-    c = {
-        r["o_custkey"]: r
-        for r in quantiles(
-            df, "o_totalprice", by="o_custkey", qs=(0.5, 0.99), mode="shuffle"
-        ).collect()
-    }
-    assert set(a) == set(c)
-    for k in a:
-        for col in ("q50", "q99", "count", "min", "max"):
-            assert a[k][col] == pytest.approx(c[k][col], rel=1e-12)
-
-
-def test_sorted_mode_matches_grouped(spark, sf_dir):
-    """mode='sorted' (repartition + sortWithinPartitions + STREAMING fused
-    finalize: completed keys emit per batch, only the trailing key carries)
-    must agree with the partial-sketch paths — including across Arrow batch
-    boundaries (small maxRecordsPerBatch would be ideal; the orders table
-    at sf0.01 spans multiple batches at the default size already)."""
-    df = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    a = {
-        r["o_custkey"]: r
-        for r in quantiles(df, "o_totalprice", by="o_custkey", qs=(0.5, 0.99)).collect()
-    }
-    s = {
-        r["o_custkey"]: r
-        for r in quantiles(
-            df, "o_totalprice", by="o_custkey", qs=(0.5, 0.99), mode="sorted"
-        ).collect()
-    }
-    assert set(a) == set(s)
-    for k in a:
-        for col in ("q50", "q99", "count", "min", "max"):
-            assert a[k][col] == pytest.approx(s[k][col], rel=1e-12)
 
 
 def test_sorted_mode_carry_across_batches(spark):
-    """Force tiny Arrow batches so keys straddle batch boundaries: the
-    carried trailing partial must merge exactly (no key lost or split)."""
+    """Force tiny Arrow batches so a key's partial rows straddle batch
+    boundaries in both the build and the finalize: mode='kernel' and
+    rollup_quantiles must merge them exactly (no key lost or split)."""
     from pyspark.sql import functions as F
+
+    from ddsparkle.spark.rollup import build_rollup, rollup_quantiles
 
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
         df = spark.range(1000).select(
-            (F.col("id") % 13).alias("k"), (F.col("id") % 97).cast("double").alias("v")
+            (F.col("id") % 13).alias("k"),
+            (F.col("id") % 97).cast("double").alias("v"),
+            F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id") * 60).alias("ts"),
         )
-        a = {r["k"]: r for r in quantiles(df, "v", by="k", qs=(0.5,)).collect()}
-        s = {
-            r["k"]: r
-            for r in quantiles(df, "v", by="k", qs=(0.5,), mode="sorted").collect()
-        }
-        assert set(a) == set(s) and len(s) == 13
-        for k in a:
-            assert a[k]["count"] == s[k]["count"] == pytest.approx(1000 / 13, abs=1)
-            assert a[k]["q50"] == pytest.approx(s[k]["q50"], rel=1e-12)
-            assert a[k]["sum"] == pytest.approx(s[k]["sum"], rel=1e-12)
+        got = assert_kernel_matches_scalar(df, "v", ["k"], (0.5,))
+        assert len(got) == 13
+        for r in got.values():
+            assert r["count"] == pytest.approx(1000 / 13, abs=1)
+        roll = build_rollup(df, "v", time_col="ts", granularity="hour", by="k")
+        assert roll.count() > 13  # several cells per key to merge
+        rolled = {r["k"]: r.asDict() for r in rollup_quantiles(roll, (0.5,), by="k").collect()}
+        assert set(rolled) == {k for (k,) in got}
+        for (k,), r in got.items():
+            for c in ("q50", "count", "min", "max"):
+                assert rolled[k][c] == r[c], (k, c)
+            assert rolled[k]["sum"] == pytest.approx(r["sum"], rel=1e-12)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
 
@@ -497,14 +471,14 @@ def test_grouped_exact_stats_with_zero_and_cancelling_values(spark):
 
 def test_all_null_groups_survive(spark):
     """A group whose values are all NULL appears with count 0 and NaN stats,
-    like a SQL grouped aggregate — in every mode."""
+    like a SQL grouped aggregate."""
     from pyspark.sql import functions as F
 
     df = spark.range(100).select(
         (F.col("id") % 4).cast("string").alias("k"),
         F.when(F.col("id") % 4 == 3, None).otherwise(F.col("id").cast("double")).alias("v"),
     )
-    for mode in ("auto", "wide", "shuffle", "sorted"):
+    for mode in ("auto", "kernel"):
         rows = {r["k"]: r for r in quantiles(df, "v", by="k", qs=(0.5,), mode=mode).collect()}
         assert set(rows) == {"0", "1", "2", "3"}, mode
         assert rows["3"]["count"] == 0.0, mode
@@ -546,8 +520,7 @@ def _cmp_sql_vs_kernel(df, col, by=None, w=None, cfg=None, qs=(0.5, 0.95, 0.99))
     cfg = cfg or SketchConfig(
         mapping_kind="log", store_policy="unbounded", max_bins=0, track_exact_stats=False
     )
-    kernel_mode = "wide" if by else "grouped"
-    a = quantiles(df, col, by=by, weight_col=w, qs=qs, config=cfg, mode=kernel_mode).toPandas()
+    a = quantiles(df, col, by=by, weight_col=w, qs=qs, config=cfg, mode="kernel").toPandas()
     b = quantiles(df, col, by=by, weight_col=w, qs=qs, config=cfg, mode="sql").toPandas()
     keys = [by] if isinstance(by, str) else list(by or [])
     if keys:
@@ -636,7 +609,7 @@ def test_sql_mode_null_group_key_survives(spark):
         SketchConfig(mapping_kind="log", store_policy="unbounded", max_bins=0,
                      track_exact_stats=False),
     ):
-        a = {r["k"]: r for r in quantiles(df, "v", by="k", qs=(0.5,), config=cfg, mode="wide").collect()}
+        a = {r["k"]: r for r in quantiles(df, "v", by="k", qs=(0.5,), config=cfg, mode="kernel").collect()}
         b = {r["k"]: r for r in quantiles(df, "v", by="k", qs=(0.5,), config=cfg, mode="sql").collect()}
         assert set(a) == set(b) == {"0", "1", "2", None}
         for k in a:
@@ -691,12 +664,10 @@ def test_quantiles_grouping_sets_match_direct_builds(spark):
         return tuple(r[c] for c in s)
 
     for s, label in ([["a", "b"], "a,b"], [["a"], "a"], [[], "total"]):
-        # mode='grouped' (kernel path): the rolled-up sets finalize through the
-        # kernel, and SQL-mode rep values differ by ~1 ulp (Spark EXP vs numpy)
-        direct = {
-            key(r, s): r
-            for r in quantiles(df, "v", by=s, config=cfg, mode="grouped").collect()
-        }
+        # scalar reference over a direct build at this grouping: the rolled-up
+        # sets finalize through the kernel, and SQL-mode rep values differ by
+        # ~1 ulp (Spark EXP vs numpy)
+        direct = scalar_finalize(build_partial_sketches(df, "v", s, cfg), s, (0.5, 0.95, 0.99))
         mine = {key(r, s): r for r in got if r["gset"] == label}
         assert set(mine) == set(direct)
         for k, r in mine.items():
