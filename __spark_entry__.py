@@ -2336,10 +2336,9 @@ def q_events_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_events_cdf_exact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-stats CDF through the round-3 SQL routing: the DEFAULT-style
     config (track_exact_stats=True, log mapping) auto-routes to the
-    pure-Catalyst plan whose final adds a stats CTE + null-safe broadcast
-    join for the exact count. Same oracle as the stats-less CDF (counts
-    are integral here, so exact == bucket total), but this row pins the
-    stats-join code path at the driver."""
+    pure-Catalyst plan, whose bucket total is the exact count. Same oracle
+    as the stats-less CDF (counts are integral here, so exact == bucket
+    total), but this row pins the exact-stats routing in the gate suite."""
     from ddsparkle.spark.agg import cdf_at_values
 
     cfg = SketchConfig(
@@ -9394,8 +9393,8 @@ def oracle_sql() -> dict[str, str]:
             ["cdf_50", "cdf_100", "cdf_500"],
             group_col="event_type",
         ),
-        # exact-stats routing: counts are integral, so the exact-count
-        # stats join must land on the same numbers as the bucket total
+        # exact-stats routing: counts are integral, so the exact count
+        # lands on the same numbers as the bucket total
         "ddsketch_events_cdf_exact_stats": ddsketch_cdf_sql(
             "events",
             "value",

@@ -882,12 +882,11 @@ def cdf_at_values(
     (``DDSketch.cdf_at_values``). Answers "what share of requests beat the
     250 ms SLO per service" in one scan at any group cardinality.
 
-    ``mode``: 'sql' (the 'auto' default for stats-less log configs) runs
-    the whole thing as a pure-Catalyst plan — two hash aggregates, no
-    window, no Python (``ddsketch_cdf_spark_sql``); 'kernel' is the
-    Arrow-vectorized partial-sketch path (required for interpolated
-    mappings and exact-stats configs, whose count column is the exact
-    count rather than the bucket total).
+    ``mode``: 'sql' (the 'auto' default for log configs, with or without
+    exact stats) runs the whole thing as a pure-Catalyst plan — one scan,
+    two hash aggregates, no Python (``ddsketch_cdf_spark_sql``); 'kernel'
+    is the Arrow-vectorized partial-sketch path (required for interpolated
+    mappings).
 
     Returns [*by, *x_names, count]. CDF estimates are in [0, 1] with the
     mapping's relative-accuracy contract on the VALUE axis (the estimate is
@@ -910,8 +909,8 @@ def cdf_at_values(
         # skips NaN values, the sql path's comparisons route NaN into the
         # positive store (Spark NaN > x is TRUE) — filter NaNs upstream if
         # they can occur, or pin mode='kernel'. Exact-stats configs route
-        # to SQL too: the CDF final reproduces the exact count via a stats
-        # join (same as quantiles' auto routing).
+        # to SQL too: the bucket total is the exact count (same as
+        # quantiles' auto routing).
         mode = "sql" if sql_mode_eligible(config, stats_final=True) else "kernel"
     if mode == "sql":
         sql = ddsketch_cdf_spark_sql(
@@ -1271,16 +1270,24 @@ def _catalyst_quantiles(df, value_col, key_cols, qs, q_names, config, weight_col
     return df.sparkSession.sql(sql, __ddsparkle_src__=df)
 
 
+# every internal column the SQL-mode generators emit; a group key with one
+# of these names would be an ambiguous reference inside the plan
+_SQL_RESERVED = frozenset({
+    "__v", "__w", "__x", "__part", "__i", "__i2", "__c", "__sm", "__mn", "__mx",
+    "__ord", "__val", "__cum", "__n", "__klo", "__khi", "__kept", "__neg", "__pos",
+})
+
+
 def sql_mode_eligible(config, stats_final: bool = False) -> bool:
     """True when an aggregation over ``config`` can run as a pure-Catalyst
     plan with kernel-identical semantics: log mapping (closed-form index
     math) and a supported store policy. ``stats_final=True`` is for callers
-    whose SQL final reproduces exact summary statistics via a stats join
-    (``quantiles``, ``cdf_at_values``) — they route exact-stats configs to
-    SQL too. The default (``stats_final=False``) additionally requires NO
-    exact-stats tracking; it is the predicate for ``build_rollup``, whose
-    persisted cells carry bucket state only (Kahan compensation state has
-    no cell column)."""
+    whose SQL final reproduces exact summary statistics (``quantiles``,
+    ``cdf_at_values``) — they route exact-stats configs to SQL too. The
+    default (``stats_final=False``) additionally requires NO exact-stats
+    tracking; it is the predicate for ``build_rollup``, whose persisted
+    cells carry bucket state only (Kahan compensation state has no cell
+    column)."""
     return (
         config.mapping().kind == "log"
         and (stats_final or not config.track_exact_stats)
@@ -1304,9 +1311,8 @@ def _sql_store_fragments(config, key_cols, value_col, weight_col) -> dict:
         )
     if config.store_policy not in ("unbounded", "sparse", "collapsing_lowest", "collapsing_highest"):
         raise ValueError(f"mode='sql' does not support store_policy={config.store_policy!r}")
-    reserved = {"__v", "__w", "__x", "__part", "__i", "__c", "__ord", "__val", "__cum", "__n"}
-    if reserved & set(key_cols):
-        raise ValueError(f"group keys collide with mode='sql' internals: {reserved & set(key_cols)}")
+    if _SQL_RESERVED & set(key_cols):
+        raise ValueError(f"group keys collide with mode='sql' internals: {_SQL_RESERVED & set(key_cols)}")
 
     def _d(x: float) -> str:
         # Spark SQL parses a bare decimal literal as DECIMAL, and DECIMAL
@@ -1344,11 +1350,21 @@ def _sql_store_fragments(config, key_cols, value_col, weight_col) -> dict:
     i_term = f"(CAST(__i AS DOUBLE) - {_d(off)})" if off != 0.0 else "__i"
     bucket_val = f"EXP({i_term} / {mult}) * (1.0 + {a})"
 
+    # exact stats ride along in the bucket aggregate (count, sum, min and
+    # max are distributive): NULLs never reach the kernel accept, but
+    # zero-weight non-NULL values DO move the exact extremes (sketch.py
+    # accept note), so min/max skip only NULLs
+    if config.track_exact_stats:
+        stats = ", __sm, __mn, __mx"
+        leaf_stats = ", SUM(__v * __w) AS __sm, MIN(__v) AS __mn, MAX(__v) AS __mx"
+        fold_stats = ", SUM(__sm) AS __sm, MIN(__mn) AS __mn, MAX(__mx) AS __mx"
+    else:
+        stats = leaf_stats = fold_stats = ""
     buckets_cte = f"""
 buckets AS (
   SELECT {g}__part,
          CASE WHEN __part <> 1 THEN {jfloor} ELSE 0 END AS __i,
-         {c_agg} AS __c
+         {c_agg} AS __c{leaf_stats}
   FROM (
     SELECT {g}__v, __w,
            CASE WHEN __v > {mi} THEN 2 WHEN __v < -{mi} THEN 0 ELSE 1 END AS __part,
@@ -1359,27 +1375,26 @@ buckets AS (
 
     if config.store_policy in ("collapsing_lowest", "collapsing_highest"):
         # global clamp model; extremes ignore zero-count buckets (they never
-        # exist in the kernel: Store.add no-ops on count 0)
-        if config.store_policy == "collapsing_lowest":
-            clamp = (
-                f"GREATEST(__i, MAX(CASE WHEN __c > 0 THEN __i END) "
-                f"OVER ({g_part}{', ' if key_cols else ''}PARTITION BY __part) - {mb - 1})"
-            ) if not key_cols else (
-                f"GREATEST(__i, MAX(CASE WHEN __c > 0 THEN __i END) "
-                f"OVER (PARTITION BY {g_group}, __part) - {mb - 1})"
-            )
-        else:
-            clamp = (
-                f"LEAST(__i, MIN(CASE WHEN __c > 0 THEN __i END) "
-                f"OVER ({g_part}{', ' if key_cols else ''}PARTITION BY __part) + {mb - 1})"
-            ) if not key_cols else (
-                f"LEAST(__i, MIN(CASE WHEN __c > 0 THEN __i END) "
-                f"OVER (PARTITION BY {g_group}, __part) + {mb - 1})"
-            )
+        # exist in the kernel: Store.add no-ops on count 0). One window per
+        # group holds both stores' extremes, so the clamp, the regroup and
+        # the walk's windows share one exchange on the group keys; the
+        # regroup keeps bucket indexes unique per (group, part)
+        ext, pick, op = (
+            ("MAX", "GREATEST", "-") if config.store_policy == "collapsing_lowest"
+            else ("MIN", "LEAST", "+")
+        )
+
+        def extreme(part: int) -> str:
+            return f"{ext}(CASE WHEN __c > 0 AND __part = {part} THEN __i END) OVER ({g_part})"
+
+        clamp = (
+            f"{pick}(__i, CASE WHEN __part = 0 THEN {extreme(0)} ELSE {extreme(2)} END"
+            f" {op} {mb - 1})"
+        )
         buckets_cte += f""",
 collapsed AS (
-  SELECT {g}__part, __i2 AS __i, SUM(__c) AS __c FROM (
-    SELECT {g}__part, __c,
+  SELECT {g}__part, __i2 AS __i, SUM(__c) AS __c{fold_stats} FROM (
+    SELECT {g}__part, __c{stats},
            CASE WHEN __part <> 1 AND __c > 0 THEN {clamp} ELSE __i END AS __i2
     FROM buckets
   ) GROUP BY {g}__part, __i2
@@ -1389,10 +1404,9 @@ collapsed AS (
         store_rel = "buckets"
 
     return {
-        "d": _d, "mult": mult, "a": a, "mi": mi,
-        "g": g, "g_group": g_group, "gby": gby, "g_part": g_part,
-        "w_src": w_src, "c_agg": c_agg, "bucket_val": bucket_val,
-        "buckets_cte": buckets_cte, "store_rel": store_rel,
+        "d": _d, "g": g, "gby": gby, "g_part": g_part,
+        "w_src": w_src, "bucket_val": bucket_val,
+        "buckets_cte": buckets_cte, "store_rel": store_rel, "stats": stats,
     }
 
 
@@ -1416,12 +1430,15 @@ def ddsketch_spark_sql(
     exp((i-offset)/multiplier)*(1+alpha)`` (``LogLikeIndexMapping.java:119-121``),
     rank walk ``first bucket with cum > q*(n-1)`` (``DDSketch.java:353-388``).
 
-    Physical shape (the 100-TB plan): scan -> hash aggregate on
+    Physical shape (the 100-TB plan): ONE scan -> hash aggregate on
     (keys, sign-part, bucket index) with MAP-SIDE partial aggregation (the
     shuffle carries at most #groups x #buckets rows, ~hundreds per group at
     alpha=0.01, regardless of input rows) -> per-group window cumsum over the
-    bucket rows -> one final hash aggregate. Everything stays inside
-    whole-stage codegen; no Arrow boundary, no Python workers.
+    bucket rows -> one final hash aggregate: two exchanges in all. Exact
+    stats are per-bucket columns of the same aggregate, and a collapsing
+    store's clamp windows on the group keys, so it shares the walk's
+    exchange. Everything stays inside whole-stage codegen; no Arrow
+    boundary, no Python workers.
 
     Semantics notes vs the kernel paths:
     - counts/quantiles/min/max replicate the kernel bit-for-bit on non-NaN
@@ -1433,8 +1450,9 @@ def ddsketch_spark_sql(
       the kernel paths;
     - stats-less ``sum``/``avg`` sum bucket contributions in unspecified
       order (Spark SUM) vs the kernel's index-ordered np.dot — equal within
-      float reassociation dust; exact-stats sum uses Spark SUM vs the
-      kernel's Kahan — same caveat. Both are exact on integer-valued data.
+      float reassociation dust; exact-stats sum folds per-bucket partial
+      sums with Spark SUM vs the kernel's Kahan — same caveat. Both are
+      exact on integer-valued data.
     - NaN values: Spark comparison semantics route NaN to the positive
       store (NaN > x is TRUE in Spark SQL); the kernel routes them to the
       zero bucket. Filter NaNs upstream if they can occur.
@@ -1456,42 +1474,31 @@ def ddsketch_spark_sql(
 
     fr = _sql_store_fragments(config, key_cols, value_col, weight_col)
     _d = fr["d"]
-    g, g_group, gby, g_part = fr["g"], fr["g_group"], fr["gby"], fr["g_part"]
-    w_src, c_agg, bucket_val = fr["w_src"], fr["c_agg"], fr["bucket_val"]
-    buckets_cte, store_rel = fr["buckets_cte"], fr["store_rel"]
+    g, gby, g_part = fr["g"], fr["gby"], fr["g_part"]
+    w_src, bucket_val = fr["w_src"], fr["bucket_val"]
+    buckets_cte, store_rel, stats = fr["buckets_cte"], fr["store_rel"], fr["stats"]
 
     live = "__n > 0 AND __c > 0"
     q_sel, clamp_sel = [], []
     for q, name in zip(qs, q_names):
         qv = f"MIN(CASE WHEN __n > 0 AND __cum > {_d(float(q))} * (__n - 1) THEN __val END)"
         q_sel.append(f"{qv} AS `{name}`")
-        clamp_sel.append(f"LEAST(GREATEST({qv}, MIN(__mn)), MAX(__mx)) AS `{name}`")
+        clamp_sel.append(
+            f"CASE WHEN MAX(__n) > 0 THEN LEAST(GREATEST({qv}, MIN(__mn)), MAX(__mx)) END AS `{name}`"
+        )
 
     if config.track_exact_stats:
-        # exact stats from the raw rows: NULLs never reach the kernel accept,
-        # but zero-weight non-NULL values DO move the exact extremes
-        # (sketch.py accept note), so min/max skip only NULLs
-        if key_cols:
-            # null-safe (<=>) join: a NULL group key is a real group for the
-            # kernel paths and for GROUP BY, but plain equality would drop it
-            on = " AND ".join(f"cumw.`{k}` <=> stats.`{k}`" for k in key_cols)
-            join = f"JOIN stats ON {on}"
-            g_out = "".join(f"cumw.`{k}`, " for k in key_cols)
-            gby_out = "GROUP BY " + ", ".join(f"cumw.`{k}`" for k in key_cols)
-        else:
-            join = "CROSS JOIN stats"
-            g_out = ""
-            gby_out = ""
-        final = f""",
-stats AS (
-  SELECT {g}{c_agg} AS __cnt,
-         SUM(__v * __w) AS __sm, MIN(__v) AS __mn, MAX(__v) AS __mx
-  FROM (SELECT {g}__v, __w FROM vals) {gby}
-)
-SELECT {g_out}{", ".join(clamp_sel)},
-  MAX(__cnt) AS count, MAX(__sm) AS sum, MIN(__mn) AS min, MAX(__mx) AS max,
-  MAX(__sm) / MAX(__cnt) AS avg
-FROM cumw {join} {gby_out}"""
+        # the exact stats were folded per bucket row; __n is the exact count.
+        # A count-0 group (only NULL values or zero weights) gets NULL stats
+        # and quantiles like the kernel paths, and never divides by zero
+        final = f"""
+SELECT {g}{", ".join(clamp_sel)},
+  CAST(MAX(__n) AS DOUBLE) AS count,
+  CASE WHEN MAX(__n) > 0 THEN SUM(__sm) END AS sum,
+  CASE WHEN MAX(__n) > 0 THEN MIN(__mn) END AS min,
+  CASE WHEN MAX(__n) > 0 THEN MAX(__mx) END AS max,
+  CASE WHEN MAX(__n) > 0 THEN SUM(__sm) / MAX(__n) END AS avg
+FROM cumw {gby}"""
     else:
         sum_expr = f"SUM(CASE WHEN {live} THEN __val * __c END)"
         final = f"""
@@ -1514,11 +1521,11 @@ walk AS (
          CASE WHEN __part = 1 THEN CAST(0.0 AS DOUBLE)
               WHEN __part = 0 THEN -{bucket_val}
               ELSE {bucket_val} END AS __val,
-         __c
+         __c{stats}
   FROM {store_rel}
 ),
 cumw AS (
-  SELECT {g}__val, __c,
+  SELECT {g}__val, __c{stats},
          SUM(__c) OVER ({g_part} ORDER BY __part, __ord ROWS UNBOUNDED PRECEDING) AS __cum,
          SUM(__c) OVER ({g_part}) AS __n
   FROM walk
@@ -1553,13 +1560,11 @@ def ddsketch_cdf_spark_sql(
     rows. Two hash aggregates, zero sorts, zero Python, whole-stage codegen
     end to end.
 
-    Stats-less configs read ``count`` off the bucket totals; exact-stats
-    configs add a ``stats`` CTE over the raw rows and a null-safe group
-    join (the same final shape as ``ddsketch_spark_sql``), so the count
-    column carries the exact-summary semantics — still two hash aggregates
-    for the CDF itself, plus the stats join. Empty global input returns
-    zero rows like the kernel paths; a count-0 group's cdf columns are
-    NULL.
+    ``count`` is the bucket total, which is also the exact count, so
+    exact-stats configs run the same plan: one scan, no stats CTE, no join.
+    A collapsing store adds the clamp window and the regroup, which share
+    the final aggregate's exchange. Empty global input returns zero rows
+    like the kernel paths; a count-0 group's cdf columns are NULL.
     """
     config = config or SketchConfig(mapping_kind="log")
     key_cols = [by] if isinstance(by, str) else list(by or [])
@@ -1575,43 +1580,15 @@ def ddsketch_cdf_spark_sql(
     fr = _sql_store_fragments(config, key_cols, value_col, weight_col)
     _d = fr["d"]
     g, gby = fr["g"], fr["gby"]
-    w_src, c_agg, bucket_val = fr["w_src"], fr["c_agg"], fr["bucket_val"]
+    w_src, bucket_val = fr["w_src"], fr["bucket_val"]
     buckets_cte, store_rel = fr["buckets_cte"], fr["store_rel"]
 
     sels = [
         f"SUM(CASE WHEN __val <= {_d(x)} THEN __c ELSE CAST(0.0 AS DOUBLE) END)"
-        f" / SUM(__c) AS `{name}`"
+        f" / NULLIF(SUM(__c), CAST(0.0 AS DOUBLE)) AS `{name}`"
         for x, name in zip(xs, x_names)
     ]
-    if config.track_exact_stats:
-        # exact count from the raw rows via a stats CTE + null-safe group
-        # join (mirrors ddsketch_spark_sql's exact-stats final); the cdf
-        # estimates themselves stay pure bucket math
-        if key_cols:
-            on = " AND ".join(f"agg.`{k}` <=> stats.`{k}`" for k in key_cols)
-            join = f"JOIN stats ON {on}"
-            g_out = "".join(f"agg.`{k}`, " for k in key_cols)
-        else:
-            join = "CROSS JOIN stats"
-            g_out = ""
-        x_out = ", ".join(f"agg.`{n}`" for n in x_names)
-        final = f""",
-agg AS (
-  SELECT {g}{", ".join(sels)}
-  FROM walk {gby}
-),
-stats AS (
-  SELECT {g}{c_agg} AS __cnt
-  FROM (SELECT {g}__v, __w FROM vals) {gby}
-)
-SELECT {g_out}{x_out},
-  CAST(stats.__cnt AS DOUBLE) AS count
-FROM agg {join}"""
-    else:
-        final = f"""
-SELECT {g}{", ".join(sels)},
-  CAST(SUM(__c) AS DOUBLE) AS count
-FROM walk {gby}"""
+    # SUM(__c) is the exact count too, so exact-stats configs share the plan
     sql = f"""
 WITH vals AS (
   SELECT {g}CAST(`{value_col}` AS DOUBLE) AS __v, {w_src} AS __w
@@ -1623,7 +1600,10 @@ walk AS (
               ELSE {bucket_val} END AS __val,
          __c
   FROM {store_rel}
-){final}"""
+)
+SELECT {g}{", ".join(sels)},
+  CAST(SUM(__c) AS DOUBLE) AS count
+FROM walk {gby}"""
     if not key_cols:
         # align the zero-input global case on the kernel paths' empty frame
         sql = f"SELECT * FROM ({sql}\n) WHERE count IS NOT NULL"

@@ -6554,8 +6554,9 @@ def key_skew_profile(df, cols):
     = max_count * 1_000_000 DIV n_nonnull — the exact share of the
     hottest key in parts-per-million. The "should this join be salted"
     measurement taken BEFORE the shuffle that would hit the hot key
-    (CLAUDE.md skew discipline: the two-stage build + salted pre-merge
-    bound shuffle skew; this operator tells you which keys need it).
+    (skew discipline: the two-stage sketch build bounds shuffle
+    skew, because only sketch rows cross the shuffle; this operator tells
+    you which keys of other shuffles need salting).
 
     The top key is deterministic under ties: argmax over (count, key
     string) pairs — a single struct max, never a sort of the key

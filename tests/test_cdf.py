@@ -127,8 +127,8 @@ def test_spark_cdf_weighted_matches_kernel(spark, sf_dir):
         ("event_type", True, "unbounded", 0, 0.0, False),
         ("event_type", False, "collapsing_lowest", 64, 0.0, False),
         (None, False, "collapsing_highest", 64, 100.0, False),  # mixed-sign values
-        # exact-stats configs: the sql final adds a stats CTE + null-safe
-        # group join for the exact count (same shape as quantiles' final)
+        # exact-stats configs: the bucket total is the exact count, so the
+        # sql plan is the stats-less one
         (None, False, "unbounded", 0, 0.0, True),
         ("event_type", True, "unbounded", 0, 0.0, True),
         ("event_type", False, "collapsing_lowest", 64, 0.0, True),
@@ -182,9 +182,9 @@ def test_cdf_sql_mode_plan_pure_jvm(spark, sf_dir):
 def test_cdf_exact_stats_auto_routes_to_sql(spark, sf_dir):
     """Exact-stats configs must auto-route to the pure-Catalyst plan. With
     an unbounded store the plan is still window/sort-free: two hash
-    aggregates + a broadcast stats join. The DEFAULT config (collapsing
-    store) also routes to SQL — its clamp needs one window, but no Python
-    stage anywhere."""
+    aggregates over one scan, and no join (the bucket total is the exact
+    count). The DEFAULT config (collapsing store) also routes to SQL — its
+    clamp needs one window, but no Python stage anywhere."""
     from ddsparkle.spark.agg import cdf_at_values
 
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -198,7 +198,7 @@ def test_cdf_exact_stats_auto_routes_to_sql(spark, sf_dir):
     for bad in ("Python", "ArrowEval", "FlatMapGroups", "Window", "Sort"):
         assert bad not in plan, f"{bad} in auto-routed exact-stats CDF plan"
     assert plan.count("HashAggregate") >= 2
-    assert "BroadcastHashJoin" in plan  # the stats join never shuffles agg rows
+    assert "Join" not in plan and plan.count("FileScan parquet") == 1, plan
 
     default_plan = (
         cdf_at_values(df, "value", [100.0], by="event_type",

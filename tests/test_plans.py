@@ -102,6 +102,32 @@ def test_auto_mode_routes_log_to_sql_and_cubic_to_kernel(spark, sf_dir):
     assert "MapInPandas" in plan_of(grouped)
 
 
+def test_sql_mode_sketch_query_one_scan_two_exchanges(spark, sf_dir):
+    """A SQL-mode sketch query reads its input once: the exact stats are
+    columns of the bucket aggregate (no stats join), and a collapsing
+    store's clamp windows on the group keys, sharing the walk's exchange.
+    Shuffles: the bucket aggregate's and the per-group one."""
+    import re
+
+    from ddsparkle.config import SketchConfig, logarithmic_collapsing_lowest_dense
+    from ddsparkle.spark.agg import cdf_at_values
+
+    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    collapsing = logarithmic_collapsing_lowest_dense()
+    unbounded = SketchConfig(mapping_kind="log", store_policy="unbounded", max_bins=0)
+    assert collapsing.track_exact_stats and unbounded.track_exact_stats
+    for res in (
+        quantiles(df, "value", qs=(0.5,), config=collapsing, mode="sql"),
+        quantiles(df, "value", by="event_type", qs=(0.5,), config=collapsing, mode="sql"),
+        cdf_at_values(df, "value", [100.0], config=collapsing, mode="sql"),
+        cdf_at_values(df, "value", [100.0], by="event_type", config=unbounded, mode="sql"),
+    ):
+        plan = plan_of(res)
+        assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
+        assert "BroadcastExchange" not in plan and "Join" not in plan, plan
+        assert len(re.findall(r"\(\d+\) Exchange", plan)) == 2, plan
+
+
 def assert_one_finalize_over_one_exchange(plan: str):
     """A sketch-row finalize: one MapInPandas directly above the plan's only
     Exchange (each operator prints in the tree and in the detail section),

@@ -586,6 +586,99 @@ def test_sql_mode_parity_weighted_and_highcard(spark, sf_dir):
     _cmp_sql_vs_kernel(orders, "o_totalprice", by="o_custkey", qs=(0.5,))
 
 
+def _mixed_sign_groups(spark):
+    """Five groups whose negative and positive stores each span several
+    decades with different extremes, so ``max_bins=8`` collapses both
+    stores of every group at a different index: "a".."c", a NULL key, and
+    an all-NULL group "n". Zeros and NULL values are mixed in; weights are
+    integral (exact counts), and group "z" has only zero weights."""
+    import pandas as pd
+
+    rng = np.random.default_rng(11)
+    rows = []
+    for gi, k in enumerate(["a", "b", "c", None]):
+        pos = np.exp(rng.uniform(-2.0 + gi, 3.0 + 2 * gi, 120))
+        neg = -np.exp(rng.uniform(-1.0 - gi, 4.0 - gi, 90))
+        vals = np.concatenate([pos, neg, np.zeros(5), np.full(5, np.nan)])
+        ws = rng.integers(1, 4, len(vals)).astype(float)
+        rows += [(k, None if np.isnan(v) else float(v), float(w)) for v, w in zip(vals, ws)]
+    rows += [("n", None, 1.0)] * 4
+    rows += [("z", float(v), 0.0) for v in (-3.0, 2.0, 7.0)]
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["k", "v", "w"]), "k string, v double, w double"
+    )
+
+
+@pytest.mark.parametrize("policy", ["collapsing_lowest", "collapsing_highest"])
+@pytest.mark.parametrize("stats", [True, False])
+def test_sql_mode_grouped_collapse_parity(spark, policy, stats):
+    """Per-group collapse with both stores active: mode='sql' clamps each
+    group's negative and positive store at that store's own extreme, like
+    the kernel, for quantiles and for cdf_at_values. Count-0 groups ("n"
+    and, weighted, "z") get NULL estimates and stats, not DIVIDE_BY_ZERO."""
+    from ddsparkle.spark.agg import cdf_at_values
+
+    df = _mixed_sign_groups(spark)
+    cfg = SketchConfig(mapping_kind="log", store_policy=policy, max_bins=8,
+                       track_exact_stats=stats)
+    for w in (None, "w"):
+        _cmp_sql_vs_kernel(df, "v", by="k", w=w, cfg=cfg, qs=(0.01, 0.25, 0.5, 0.75, 0.99))
+        xs = [-50.0, -1.0, 0.0, 0.5, 20.0, 1000.0]
+        a, b = (
+            cdf_at_values(df, "v", xs, by="k", config=cfg, weight_col=w, mode=m)
+            .toPandas().sort_values("k", na_position="last").reset_index(drop=True)
+            for m in ("sql", "kernel")
+        )
+        assert a.equals(b), (w, a, b)
+        assert a["k"].isna().sum() == 1 and set(a["k"].dropna()) == {"a", "b", "c", "n", "z"}
+
+
+def _sql_generators(by, collapsing="collapsing_lowest"):
+    from ddsparkle.spark.agg import (
+        ddsketch_cdf_spark_sql,
+        ddsketch_spark_sql,
+        ddsketch_trimmed_spark_sql,
+        sketch_rows_spark_sql,
+    )
+
+    stats = SketchConfig(mapping_kind="log", store_policy=collapsing, max_bins=8)
+    plain = SketchConfig(mapping_kind="log", store_policy=collapsing, max_bins=8,
+                         track_exact_stats=False)
+    return [
+        lambda: ddsketch_spark_sql("t", "v", [0.5], config=stats, by=by),
+        lambda: ddsketch_cdf_spark_sql("t", "v", [1.0], config=stats, by=by),
+        lambda: ddsketch_trimmed_spark_sql("t", "v", 0.1, 0.1, config=plain, by=by),
+        lambda: sketch_rows_spark_sql("t", "v", config=plain, by=by),
+    ]
+
+
+def test_sql_reserved_names_are_the_internal_columns():
+    """The reserved-key guard lists exactly the internal columns the
+    SQL-mode generators emit."""
+    import re
+
+    from ddsparkle.spark.agg import _SQL_RESERVED
+
+    used = set()
+    for policy in ("collapsing_lowest", "collapsing_highest"):
+        for gen in _sql_generators(["k"], policy):
+            used |= set(re.findall(r"\b__\w+", gen()))
+    assert used == set(_SQL_RESERVED)
+
+
+@pytest.mark.parametrize("name", [
+    "__v", "__w", "__x", "__part", "__i", "__i2", "__c", "__sm", "__mn", "__mx",
+    "__ord", "__val", "__cum", "__n", "__klo", "__khi", "__kept", "__neg", "__pos",
+])
+def test_sql_mode_reserved_group_key_raises(name):
+    """A group key named like an internal column gets a ValueError naming
+    it, from every SQL-mode generator, instead of Spark's
+    AMBIGUOUS_REFERENCE at analysis."""
+    for gen in _sql_generators(["k", name]):
+        with pytest.raises(ValueError, match=f"'{name}'"):
+            gen()
+
+
 def test_sql_mode_rejects_non_log_mapping(spark, sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     with pytest.raises(ValueError, match="mapping_kind='log'"):
@@ -595,7 +688,9 @@ def test_sql_mode_rejects_non_log_mapping(spark, sf_dir):
 
 def test_sql_mode_null_group_key_survives(spark):
     """A NULL group key is a real group (SQL GROUP BY semantics, and the
-    kernel paths keep it) — the exact-stats join must be null-safe."""
+    kernel paths keep it), with or without exact stats: the stats are
+    columns of the bucket aggregate, so they group with the NULL key like
+    the buckets do."""
     from pyspark.sql import functions as F
 
     df = spark.range(100).select(
@@ -605,7 +700,7 @@ def test_sql_mode_null_group_key_survives(spark):
         F.col("id").cast("double").alias("v"),
     )
     for cfg in (
-        SketchConfig(mapping_kind="log"),  # exact stats (joined path)
+        SketchConfig(mapping_kind="log"),  # exact stats
         SketchConfig(mapping_kind="log", store_policy="unbounded", max_bins=0,
                      track_exact_stats=False),
     ):
