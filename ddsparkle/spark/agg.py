@@ -7,12 +7,18 @@ expressed here as a two-stage Arrow-vectorized pipeline:
     stage 1  df.mapInPandas(build)          — no shuffle; one sketch row per
                                               (task, group); pure NumPy inside
     stage 2  repartition(keys).mapInPandas  — shuffles only sketch rows; every
-             (merge + finalize)               group of a partition merges and
-                                              rank-walks in one vectorized pass
+             (merge [+ finalize])             group of a partition merges (and
+                                              rank-walks) in one vectorized pass
 
-For global aggregations stage 2 runs on the driver instead, over the
-collected partial rows; an intermediate tree stage bounds how many rows it
-folds. All per-row work (value derivation, filters) should be done with
+Every Spark-side merge of sketch rows (the stage-1 flush, the merge down to
+one row per key, the global tree level and the finalize) runs one kernel,
+``_merge_buckets``, over a flattened (key, store, bucket index, count)
+stream. ``serde.merge_rows`` and ``DDSketch.merge`` remain the scalar
+reference it is tested against.
+
+For global aggregations ``quantiles`` runs stage 2 on the driver instead,
+over the collected partial rows; an intermediate tree stage bounds how many
+rows it folds. All per-row work (value derivation, filters) should be done with
 Catalyst expressions *before* calling these functions so pushdown/pruning
 apply to the scan.
 """
@@ -26,8 +32,8 @@ import numpy as np
 import pandas as pd
 
 from ..config import SketchConfig
-from ..serde import SKETCH_ROW_FIELDS, merge_rows, row_to_sketch, sketch_to_row, spark_sketch_schema
-from ..store import BucketStore, _group_sum
+from ..serde import SKETCH_ROW_FIELDS, merge_rows, row_to_sketch, spark_sketch_schema
+from ..store import _group_sum
 
 __all__ = [
     "quantiles",
@@ -46,19 +52,16 @@ def quantile_column_name(q: float) -> str:
     return "q" + f"{pct:.6f}".rstrip("0").replace(".", "_")
 
 
-def _sketch_rows_df(rows: list[dict], key_cols: Sequence[str]) -> pd.DataFrame:
-    cols = list(key_cols) + SKETCH_ROW_FIELDS
-    if not rows:
-        # object dtype so Arrow can map empty columns onto list/str types
-        return pd.DataFrame({c: pd.Series([], dtype=object) for c in cols})
-    return pd.DataFrame(rows, columns=cols)
-
-
 def _partial_schema(df, key_cols: Sequence[str]):
     from pyspark.sql import types as T
 
     key_fields = [df.schema[c] for c in key_cols]
     return T.StructType(key_fields + list(spark_sketch_schema().fields))
+
+
+# A stage-1 task flushes its groups as sketch rows once it holds more than
+# this many, so task memory stays ~cap x sketch-size at any key cardinality.
+_MAX_GROUPS_PER_TASK = 200_000
 
 
 def build_partial_sketches(
@@ -67,7 +70,6 @@ def build_partial_sketches(
     key_cols: Sequence[str] = (),
     config: Optional[SketchConfig] = None,
     weight_col: Optional[str] = None,
-    max_groups_per_task: int = 200_000,
 ):
     """Stage 1: per-task, per-group sketch build via ``mapInPandas``.
 
@@ -76,176 +78,188 @@ def build_partial_sketches(
     SQL aggregates. Returns a DataFrame of ``key_cols`` + sketch struct
     fields, with at most (#tasks x #groups-per-task) rows and NO shuffle.
 
-    Bounded memory under high-cardinality keys: when a task's in-flight group
-    dictionary exceeds ``max_groups_per_task``, it is flushed as sketch rows
+    One vectorized builder serves every shape; a keyless build is a single
+    constant key. Every group a task sees gets a row, so a group whose
+    values are all NULL (or a keyless input of only NULLs) has a count-0
+    row, while an empty input has none.
+
+    Bounded memory under high-cardinality keys: when a task's in-flight
+    groups exceed ``_MAX_GROUPS_PER_TASK``, they are flushed as sketch rows
     mid-stream (a spill of *mergeable partials*, not raw rows) — stage 2
-    merges duplicates, so results are unchanged and task memory stays
-    ~max_groups_per_task x sketch-size regardless of key cardinality.
+    merges duplicates, so results are unchanged.
     """
     config = config or SketchConfig()
     key_cols = list(key_cols)
     cols = key_cols + [value_col] + ([weight_col] if weight_col else [])
     projected = df.select(*cols)
-    schema = _partial_schema(projected, key_cols)
-    cfg = config  # capture a picklable dataclass, not self
-
-    def _rows_frame(sketches: dict) -> pd.DataFrame:
-        rows = []
-        for key, sk in sketches.items():
-            row = dict(zip(key_cols, key))
-            row.update(sketch_to_row(sk))
-            for f in ("neg_idx", "neg_cnt", "pos_idx", "pos_cnt"):
-                row[f] = row[f].tolist()
-            rows.append(row)
-        return _sketch_rows_df(rows, key_cols)
-
-    if key_cols:
-        build = _make_grouped_builder(
-            cfg, key_cols, value_col, weight_col, max_groups_per_task
-        )
-    else:
-
-        def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            sketches: dict[tuple, object] = {}
-            for pdf in batches:
-                values = pdf[value_col].to_numpy(np.float64, na_value=np.nan)
-                weights = (
-                    pdf[weight_col].to_numpy(np.float64, na_value=np.nan) if weight_col else None
-                )
-                valid = ~np.isnan(values)
-                if weights is not None:
-                    valid &= ~np.isnan(weights)
-                v = values[valid]
-                if v.size == 0:
-                    continue
-                sk = sketches.get(())
-                if sk is None:
-                    sk = sketches[()] = cfg.new_sketch()
-                sk.accept(v, None if weights is None else weights[valid])
-            yield _rows_frame(sketches)
-
-    return projected.mapInPandas(build, schema=schema)
+    build = _make_builder(config, key_cols, value_col, weight_col)
+    return projected.mapInPandas(build, schema=_partial_schema(projected, key_cols))
 
 
 _INT32_MIN = -(2**31)
+# the sketch-identity fields every row of one merge must share
+_IDENTITY = ("mapping_kind", "gamma", "index_offset", "store_policy", "max_bins", "has_exact")
+# exact stats of a key with no values: count, sum, simple sum, min, max
+_EMPTY_STATS = np.array([[0.0], [0.0], [0.0], [math.inf], [-math.inf]])
 
 
-def _make_grouped_builder(cfg, key_cols, value_col, weight_col, max_groups_per_task):
-    """Fully vectorized multi-group stage 1: one packed-key aggregation per
-    Arrow batch instead of per-group accept() calls — the difference between
-    O(groups) Python overhead and O(1) per batch when groups are small (e.g.
-    grouping by conv_id where each conversation has ~10 turns).
+def _pack(kid, part, idx):
+    """(key id, store part, bucket index) -> one sortable int64: 29 bits of
+    key id, 2 of part (0 negative, 1 zero bucket, 2 positive) and the index
+    as uint32."""
+    return (kid << 34) | (part << 32) | (idx - _INT32_MIN)
 
-    Bucket counts accumulate as a packed COO stream
-    ``(key_id << 34) | (store_part << 32) | uint32(bucket_index)`` aggregated
-    with the same bincount/reduceat kernel the stores use; exact stats
-    accumulate as parallel per-key arrays. Memory stays bounded: if the
-    aggregated tuple stream exceeds the cap, all current groups flush as
-    mergeable sketch rows.
+
+def _unpack(packed):
+    return packed >> 34, (packed >> 32) & 3, (packed & 0xFFFFFFFF) + _INT32_MIN
+
+
+def _factorize_keys(pdf, key_cols):
+    """Per-row key ids plus a frame of the distinct keys (one row per id);
+    NULL keys are a group. No key columns: every row is key 0."""
+    if not key_cols:
+        return np.zeros(len(pdf), np.int64), pd.DataFrame(index=range(1))
+    if len(key_cols) == 1:
+        codes, uniques = pd.factorize(pdf[key_cols[0]], use_na_sentinel=False)
+        keys = pd.DataFrame({key_cols[0]: uniques})
+    else:
+        codes, uniques = pd.factorize(
+            pd.MultiIndex.from_frame(pdf[key_cols]), use_na_sentinel=False
+        )
+        keys = uniques.to_frame(index=False)
+        keys.columns = key_cols
+    return codes.astype(np.int64), keys
+
+
+def _merge_buckets(kid, part, idx, cnt, policy, max_bins):
+    """The sketch merge for every key at once: clamp each collapsing
+    (key, store) at its own extreme index, then sum counts per (key, part,
+    index). Returns ``(kid, part, idx, cnt)`` sorted by (key, part, index),
+    zero counts dropped — ``BucketStore.add`` semantics per key."""
+    keep = cnt != 0
+    kid, part, idx, cnt = kid[keep], part[keep], idx[keep], cnt[keep]
+    if policy in ("collapsing_lowest", "collapsing_highest"):
+        # the zero bucket (part 1, index 0) is its own group: a no-op clamp
+        idx = _clamp_per_group((kid << 2) | part, idx, policy, max_bins)
+    packed, cnt = _group_sum(_pack(kid, part, idx), cnt)
+    return (*_unpack(packed), cnt)
+
+
+def _merge_sketch_frame(pdf, key_cols):
+    """Merge a frame of sketch rows to one sketch per key (one sketch when
+    ``key_cols`` is empty). Returns the arguments of ``_sketch_rows_frame``:
+    the distinct keys, the shared sketch identity, the ``_merge_buckets``
+    arrays and the (5, n_keys) exact stats (count, sum, simple sum, min,
+    max). The sum folds ``stat_sum - stat_sum_comp`` plainly, no Kahan."""
+    # one sketch config per merge: heterogeneous rows (e.g. checkpoints from
+    # two alphas unioned) fail loudly instead of mixing bucket spaces
+    for c in _IDENTITY:
+        if pdf[c].nunique(dropna=False) > 1:
+            raise ValueError(
+                f"sketch rows are not mergeable: heterogeneous {c!r} values "
+                f"{pdf[c].unique()[:4].tolist()}"
+            )
+    ident = {c: pdf[c].iloc[0] for c in _IDENTITY}
+    codes, keys = _factorize_keys(pdf, key_cols)
+
+    def flat(part, col_idx, col_cnt):
+        lens = np.fromiter(map(len, pdf[col_idx]), np.int64, len(pdf))
+        idx = np.concatenate([np.asarray(x, np.int64) for x in pdf[col_idx]])
+        cnt = np.concatenate([np.asarray(x, np.float64) for x in pdf[col_cnt]])
+        kid = np.repeat(codes, lens)
+        return kid, np.full(kid.size, part), idx, cnt
+
+    zero = (codes, np.ones_like(codes), np.zeros_like(codes), pdf["zero_count"].to_numpy(np.float64))
+    streams = [flat(0, "neg_idx", "neg_cnt"), zero, flat(2, "pos_idx", "pos_cnt")]
+    kid, part, idx, cnt = (np.concatenate(s) for s in zip(*streams))
+    buckets = _merge_buckets(kid, part, idx, cnt, ident["store_policy"], int(ident["max_bins"]))
+
+    def col(c):
+        return pdf[c].to_numpy(np.float64)
+
+    stats = np.repeat(_EMPTY_STATS, len(keys), axis=1)
+    np.add.at(stats[0], codes, col("stat_count"))
+    np.add.at(stats[1], codes, col("stat_sum") - col("stat_sum_comp"))
+    np.add.at(stats[2], codes, col("stat_simple_sum"))
+    np.minimum.at(stats[3], codes, col("stat_min"))
+    np.maximum.at(stats[4], codes, col("stat_max"))
+    return keys, ident, *buckets, stats
+
+
+def _sketch_rows_frame(keys, ident, kid, part, idx, cnt, stats):
+    """One sketch row per key id: ``keys`` plus the ``SKETCH_ROW_FIELDS``
+    columns, each store array sliced out of the sorted ``_merge_buckets``
+    streams."""
+    n = len(keys)
+    bounds = np.searchsorted(kid * 3 + part, np.arange(3 * n + 1)).tolist()
+    neg, zero, pos, end = bounds[0:-1:3], bounds[1::3], bounds[2::3], bounds[3::3]
+
+    def cells(a, starts, ends):
+        return [a[s:e] for s, e in zip(starts, ends)]
+
+    zero_count = np.zeros(n)
+    is_zero = part == 1
+    zero_count[kid[is_zero]] = cnt[is_zero]
+    return keys.reset_index(drop=True).assign(
+        mapping_kind=ident["mapping_kind"],
+        gamma=ident["gamma"],
+        index_offset=ident["index_offset"],
+        store_policy=ident["store_policy"],
+        max_bins=ident["max_bins"],
+        zero_count=zero_count,
+        neg_idx=cells(idx, neg, zero),
+        neg_cnt=cells(cnt, neg, zero),
+        pos_idx=cells(idx, pos, end),
+        pos_cnt=cells(cnt, pos, end),
+        stat_count=stats[0],
+        stat_sum=stats[1],
+        stat_sum_comp=0.0,
+        stat_simple_sum=stats[2],
+        stat_min=stats[3],
+        stat_max=stats[4],
+        has_exact=ident["has_exact"],
+    )
+
+
+def _make_builder(cfg, key_cols, value_col, weight_col):
+    """Vectorized stage 1: one packed-key aggregation per Arrow batch instead
+    of per-group accept() calls, so Python cost is O(1) per batch however
+    small the groups (e.g. grouping by conv_id, ~10 turns per conversation).
+
+    Bucket counts accumulate as a ``_pack``ed stream summed with the same
+    bincount/reduceat kernel the stores use; exact stats accumulate in a
+    (5, n_keys) array. A flush is ``_merge_buckets`` (the collapse clamp)
+    plus ``_sketch_rows_frame``. Memory stays bounded: if the stream or the
+    key count exceeds its cap, all current groups flush as mergeable rows.
     """
     mapping = cfg.mapping()
     min_idx_value = max(mapping.min_indexable_value, 0.0)
     max_idx_value = mapping.max_indexable_value
     track_stats = cfg.track_exact_stats
-    tuple_cap = max(max_groups_per_task * 4, 1 << 21)
+    policy, max_bins = cfg.store_policy, int(cfg.max_bins)
+    max_groups = _MAX_GROUPS_PER_TASK  # read here, so tasks get the driver's value
+    tuple_cap = max(max_groups * 4, 1 << 21)
+    ident = dict(
+        mapping_kind=mapping.kind, gamma=mapping.gamma, index_offset=mapping.index_offset,
+        store_policy=policy, max_bins=max_bins, has_exact=track_stats,
+    )
+
+    def empty_state():
+        # key -> key id, summed packed buckets and their counts, exact stats
+        return {}, np.empty(0, np.int64), np.empty(0, np.float64), _EMPTY_STATS[:, :0]
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        key_to_id: dict = {}
-        key_list: list = []
-        acc_packed = np.empty(0, np.int64)
-        acc_counts = np.empty(0, np.float64)
-        # exact-stat accumulators indexed by key id
-        st_count: list[float] = []
-        st_sum: list[float] = []
-        st_min: list[float] = []
-        st_max: list[float] = []
-
-        def new_key(key) -> int:
-            kid = len(key_list)
-            if kid >= 1 << 29:
-                # packed COO reserves 29 bits for the key id; flush thresholds
-                # keep us far below this, but fail loudly rather than wrap
-                raise RuntimeError(
-                    "too many in-flight groups in one task; lower max_groups_per_task"
-                )
-            key_to_id[key] = kid
-            key_list.append(key)
-            if track_stats:
-                st_count.append(0.0)
-                st_sum.append(0.0)
-                st_min.append(math.inf)
-                st_max.append(-math.inf)
-            return kid
+        key_to_id, acc_packed, acc_counts, stats = empty_state()
 
         def emit() -> pd.DataFrame:
-            nonlocal acc_packed, acc_counts, key_to_id, key_list
-            nonlocal st_count, st_sum, st_min, st_max
-            rows = []
-            # bucket runs per kid (acc_packed sorted -> kids contiguous)
-            runs: dict[int, tuple[int, int]] = {}
-            if acc_packed.size:
-                kid_arr = (acc_packed >> 34).astype(np.int64)
-                part_arr = ((acc_packed >> 32) & 3).astype(np.int64)
-                idx_arr = (acc_packed & 0xFFFFFFFF).astype(np.int64) + _INT32_MIN
-                boundaries = np.nonzero(np.diff(kid_arr))[0] + 1
-                starts = np.concatenate([[0], boundaries])
-                ends = np.concatenate([boundaries, [kid_arr.size]])
-                for s, e in zip(starts, ends):
-                    runs[int(kid_arr[s])] = (int(s), int(e))
-            # one row per REGISTERED key — groups whose values were all
-            # null/NaN still appear (count 0), matching SQL group semantics
-            for kid, key in enumerate(key_list):
-                if kid in runs:
-                    s, e = runs[kid]
-                    parts = part_arr[s:e]
-                    idxs = idx_arr[s:e]
-                    cnts = acc_counts[s:e]
-                    neg_sel = parts == 0
-                    pos_sel = parts == 2
-                    neg = BucketStore(cfg.store_policy, cfg.max_bins)
-                    pos = BucketStore(cfg.store_policy, cfg.max_bins)
-                    if neg_sel.any():
-                        neg.add(idxs[neg_sel], cnts[neg_sel])
-                    if pos_sel.any():
-                        pos.add(idxs[pos_sel], cnts[pos_sel])
-                    zero_sel = parts == 1
-                    zero_count = float(cnts[zero_sel].sum()) if zero_sel.any() else 0.0
-                else:
-                    neg = BucketStore(cfg.store_policy, cfg.max_bins)
-                    pos = BucketStore(cfg.store_policy, cfg.max_bins)
-                    zero_count = 0.0
-                row = dict(zip(key_cols, key))
-                row.update(
-                    mapping_kind=mapping.kind,
-                    gamma=mapping.gamma,
-                    index_offset=mapping.index_offset,
-                    store_policy=cfg.store_policy,
-                    max_bins=int(cfg.max_bins),
-                    zero_count=zero_count,
-                    neg_idx=neg.indexes.tolist(),
-                    neg_cnt=neg.counts.tolist(),
-                    pos_idx=pos.indexes.tolist(),
-                    pos_cnt=pos.counts.tolist(),
-                    stat_count=st_count[kid] if track_stats else 0.0,
-                    stat_sum=st_sum[kid] if track_stats else 0.0,
-                    stat_sum_comp=0.0,
-                    stat_simple_sum=st_sum[kid] if track_stats else 0.0,
-                    stat_min=st_min[kid] if track_stats else math.inf,
-                    stat_max=st_max[kid] if track_stats else -math.inf,
-                    has_exact=track_stats,
-                )
-                rows.append(row)
-            key_to_id, key_list = {}, []
-            acc_packed = np.empty(0, np.int64)
-            acc_counts = np.empty(0, np.float64)
-            st_count, st_sum, st_min, st_max = [], [], [], []
-            if not rows:
-                return pd.DataFrame(
-                    {c: pd.Series([], dtype=object) for c in list(key_cols) + SKETCH_ROW_FIELDS}
-                )
-            return pd.DataFrame(rows, columns=list(key_cols) + SKETCH_ROW_FIELDS)
+            keys = pd.DataFrame(list(key_to_id), columns=key_cols)
+            stats[2] = stats[1]
+            buckets = _merge_buckets(*_unpack(acc_packed), acc_counts, policy, max_bins)
+            return _sketch_rows_frame(keys, ident, *buckets, stats)
 
         for pdf in batches:
+            if not len(pdf):
+                continue
             values = pdf[value_col].to_numpy(np.float64, na_value=np.nan)
             weights = (
                 pdf[weight_col].to_numpy(np.float64, na_value=np.nan)
@@ -254,89 +268,53 @@ def _make_grouped_builder(cfg, key_cols, value_col, weight_col, max_groups_per_t
             )
             if weight_col and np.any(weights < 0):
                 raise ValueError("The count cannot be negative.")
-            valid = ~(np.isnan(values) | np.isnan(weights)) & (weights > 0)
             # batch-local factorize -> task-global key ids; keys register even
             # when every row is null so all-null groups survive (SQL groups)
-            if len(key_cols) == 1:
-                codes, uniques = pd.factorize(pdf[key_cols[0]], use_na_sentinel=False)
-                uniq_keys = [(u,) for u in uniques]
-            else:
-                codes, uniques = pd.factorize(
-                    pd.MultiIndex.from_frame(pdf[key_cols]), use_na_sentinel=False
+            codes, keys = _factorize_keys(pdf, key_cols)
+            uniq = keys.itertuples(index=False, name=None) if key_cols else [()]
+            local_to_global = np.fromiter(
+                (key_to_id.setdefault(k, len(key_to_id)) for k in uniq), np.int64, len(keys)
+            )
+            if len(key_to_id) > 1 << 29:
+                # _pack reserves 29 bits for the key id; the flush cap keeps
+                # tasks far below this, but fail loudly rather than wrap
+                raise RuntimeError("too many in-flight groups in one task")
+            if stats.shape[1] < len(key_to_id):
+                fresh = np.repeat(_EMPTY_STATS, len(key_to_id) - stats.shape[1], axis=1)
+                stats = np.concatenate([stats, fresh], axis=1)
+            valid = ~(np.isnan(values) | np.isnan(weights)) & (weights > 0)
+            if valid.any():
+                kid = local_to_global[codes][valid]
+                v = values[valid]
+                w = weights[valid]
+                if np.any(np.abs(v) > max_idx_value):
+                    raise ValueError(
+                        "The input value is outside the range that is tracked by the sketch."
+                    )
+                pos = v > min_idx_value
+                neg = v < -min_idx_value
+                part = np.ones(v.size, np.int64)
+                idx = np.zeros(v.size, np.int64)
+                if pos.any():
+                    part[pos] = 2
+                    idx[pos] = mapping.index(v[pos])
+                if neg.any():
+                    part[neg] = 0
+                    idx[neg] = mapping.index(-v[neg])
+                acc_packed, acc_counts = _group_sum(
+                    np.concatenate([acc_packed, _pack(kid, part, idx)]),
+                    np.concatenate([acc_counts, w]),
                 )
-                uniq_keys = list(uniques)
-            local_to_global = np.empty(len(uniq_keys), np.int64)
-            for j, key in enumerate(uniq_keys):
-                kid = key_to_id.get(key)
-                local_to_global[j] = new_key(key) if kid is None else kid
-            if not valid.any():
-                continue
-            kid_rows = local_to_global[codes][valid]
-            v = values[valid]
-            w = weights[valid]
-            if np.any(np.abs(v) > max_idx_value):
-                raise ValueError(
-                    "The input value is outside the range that is tracked by the sketch."
-                )
-            pos = v > min_idx_value
-            neg = v < -min_idx_value
-            zero = ~(pos | neg)
-            packed_parts = []
-            count_parts = []
-            if pos.any():
-                bidx = mapping.index(v[pos]).astype(np.int64)
-                packed_parts.append(
-                    (kid_rows[pos] << 34) | (np.int64(2) << 32) | (bidx - _INT32_MIN)
-                )
-                count_parts.append(w[pos])
-            if neg.any():
-                bidx = mapping.index(-v[neg]).astype(np.int64)
-                packed_parts.append(
-                    (kid_rows[neg] << 34) | (np.int64(0) << 32) | (bidx - _INT32_MIN)
-                )
-                count_parts.append(w[neg])
-            if zero.any():
-                packed_parts.append(
-                    (kid_rows[zero] << 34) | (np.int64(1) << 32) | np.int64(-_INT32_MIN)
-                )
-                count_parts.append(w[zero])
-            batch_packed = np.concatenate(packed_parts)
-            batch_counts = np.concatenate(count_parts)
-            if acc_packed.size:
-                batch_packed = np.concatenate([acc_packed, batch_packed])
-                batch_counts = np.concatenate([acc_counts, batch_counts])
-            acc_packed, acc_counts = _group_sum(batch_packed, batch_counts)
-            if track_stats:
-                # per-key exact stats for this batch: ONE sort and four
-                # reduceat passes over the same segmentation, so all arrays
-                # align by construction. (_group_sum is NOT usable here: it
-                # drops zero-SUM groups — bucket semantics — so a group
-                # whose batch-local sum(w*v) is 0 (zero values, or positive/
-                # negative cancellation) would truncate/misalign the zip and
-                # silently corrupt exact stats of later groups.)
-                order = np.argsort(kid_rows, kind="stable")
-                sk_sorted = kid_rows[order]
-                v_sorted = v[order]
-                w_sorted = w[order]
-                b_start = np.nonzero(
-                    np.concatenate([[True], sk_sorted[1:] != sk_sorted[:-1]])
-                )[0]
-                bk = sk_sorted[b_start]
-                bcnt = np.add.reduceat(w_sorted, b_start)
-                bsum = np.add.reduceat(w_sorted * v_sorted, b_start)
-                bmin = np.minimum.reduceat(v_sorted, b_start)
-                bmax = np.maximum.reduceat(v_sorted, b_start)
-                for kid, c, s_, mn, mx in zip(bk, bcnt, bsum, bmin, bmax):
-                    kid = int(kid)
-                    st_count[kid] += float(c)
-                    st_sum[kid] += float(s_)
-                    if mn < st_min[kid]:
-                        st_min[kid] = float(mn)
-                    if mx > st_max[kid]:
-                        st_max[kid] = float(mx)
-            if acc_packed.size > tuple_cap or len(key_list) > max_groups_per_task:
+                if track_stats:
+                    np.add.at(stats[0], kid, w)
+                    np.add.at(stats[1], kid, w * v)
+                    np.minimum.at(stats[3], kid, v)
+                    np.maximum.at(stats[4], kid, v)
+            if acc_packed.size > tuple_cap or len(key_to_id) > max_groups:
                 yield emit()
-        yield emit()
+                key_to_id, acc_packed, acc_counts, stats = empty_state()
+        if key_to_id:
+            yield emit()
 
     return build
 
@@ -345,43 +323,14 @@ def merge_partials_to_sketch_rows(partials, key_cols: Sequence[str] = ()):
     """Merge partial sketch rows down to ONE sketch row per key (shuffle of
     sketch rows only). Useful for checkpointing merged state.
 
-    Implemented as repartition-by-key + ONE ``mapInPandas`` pass with
-    pandas-side grouping rather than ``applyInPandas``: grouped-map pays a
-    per-group Python apply (~1 ms each — dominant when most cells are fine
-    e.g. a rollup's hourly x dimension grid), while here keys that already
-    have a single partial row pass through with NO sketch reconstruction at
-    all and only genuinely-split keys pay a merge."""
+    A repartition by key (to one partition when keyless), then
+    ``merge_partials_within_partitions``: every key of a partition merges
+    in one vectorized pass, so there is no per-group Python apply and no
+    per-key sketch object. Returns ``[*key_cols, *SKETCH_ROW_FIELDS]``."""
     key_cols = list(key_cols)
-    spark_keys = key_cols or ["__g"]
-    src = partials if key_cols else partials.withColumn("__g", _lit0())
-    schema = _partial_schema(src, spark_keys)
-    cols = list(schema.fieldNames())
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        dup = pdf.duplicated(spark_keys, keep=False)
-        singles = pdf[~dup]
-        if len(singles):
-            yield singles[cols]
-        if not dup.any():
-            return
-        rows = []
-        for key, grp in pdf[dup].groupby(spark_keys, sort=False, dropna=False):
-            sk = merge_rows(grp[SKETCH_ROW_FIELDS].iloc[i] for i in range(len(grp)))
-            key_t = key if isinstance(key, tuple) else (key,)
-            row = dict(zip(spark_keys, key_t))
-            row.update(sketch_to_row(sk))
-            for f in ("neg_idx", "neg_cnt", "pos_idx", "pos_cnt"):
-                row[f] = row[f].tolist()
-            rows.append(row)
-        yield pd.DataFrame(rows, columns=cols)
-
-    parted = src.repartition(*[src[c] for c in spark_keys])
-    out = parted.mapInPandas(fold, schema=schema)
-    return out.drop("__g") if not key_cols else out
+    src = partials.select(*key_cols, *SKETCH_ROW_FIELDS)
+    parted = src.repartition(*[src[c] for c in key_cols]) if key_cols else src.repartition(1)
+    return merge_partials_within_partitions(parted, key_cols)
 
 
 def _lit0():
@@ -445,11 +394,16 @@ def quantiles(
         raise ValueError(f"unknown mode {mode!r}; one of auto|kernel|sql")
     if mode == "auto":
         # the log mapping's index math is closed-form in SQL, so the whole
-        # aggregation can stay inside whole-stage codegen with map-side
-        # partial aggregation — strictly better than any Python-stage plan
-        # (validated hash-identical vs the kernel path across the oracle
-        # gate suite; see _catalyst_quantiles). Interpolated mappings need frexp
-        # bit access, so they keep the Arrow-vectorized kernel path.
+        # aggregation runs as one Catalyst plan with no Python worker
+        # (hash-identical to the kernel path across the oracle gate suite;
+        # see _catalyst_quantiles). It is not faster at every shape: on a
+        # 4-core host (local[4], one log config, value = text length) the
+        # kernel took 0.39-0.51 s against sql's 0.54-0.74 s at 50k rows,
+        # global or by 4 groups, while at 1M rows by 100k groups sql took
+        # 3.3-3.8 s against the kernel's 5.6-6.5 s. The rule stays "log
+        # mapping -> sql" until a measured crossover replaces it.
+        # Interpolated mappings need frexp bit access, so they keep the
+        # Arrow-vectorized kernel path.
         mode = "sql" if sql_mode_eligible(config, stats_final=True) else "kernel"
     qs = [float(q) for q in qs]
     if any(not 0.0 <= q <= 1.0 for q in qs):
@@ -543,114 +497,42 @@ def finalize_sketch_rows(src, group_keys: Sequence[str], qs: Sequence[float], q_
 
 
 def merge_partials_within_partitions(partials, key_cols: Sequence[str]):
-    """mapInPandas tree level: fold sketch rows within each partition (no
-    shuffle), one output row per (partition, key)."""
+    """Fold the sketch rows of each partition (no shuffle) to one row per
+    (partition, key) with the vectorized merge (``_merge_sketch_frame``).
+    Returns ``[*key_cols, *SKETCH_ROW_FIELDS]``."""
     key_cols = list(key_cols)
-    schema = partials.schema
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, object] = {}
-        for pdf in batches:
-            for i in range(len(pdf)):
-                key = tuple(pdf[c].iloc[i] for c in key_cols)
-                sk = row_to_sketch(pdf[SKETCH_ROW_FIELDS].iloc[i])
-                if key in acc:
-                    acc[key].merge(sk)
-                else:
-                    acc[key] = sk
-        rows = []
-        for key, sk in acc.items():
-            row = dict(zip(key_cols, key))
-            row.update(sketch_to_row(sk))
-            for f in ("neg_idx", "neg_cnt", "pos_idx", "pos_cnt"):
-                row[f] = row[f].tolist()
-            rows.append(row)
-        yield _sketch_rows_df(rows, key_cols)
+        pdfs = [p for p in batches if len(p)]
+        if pdfs:
+            pdf = pd.concat(pdfs, ignore_index=True)
+            yield _sketch_rows_frame(*_merge_sketch_frame(pdf, key_cols))
 
-    return partials.mapInPandas(fold, schema=schema)
+    return partials.mapInPandas(fold, schema=_partial_schema(partials, key_cols))
 
 
 def _vectorized_grouped_finalize(pdf, key_cols, qs, q_names, out_cols):
     """Merge + quantile-finalize EVERY group of a partition in one vectorized
-    pass over the flattened bucket arrays.
+    pass: ``_merge_sketch_frame``, then one rank walk over the merged
+    buckets of all groups.
 
-    Walk order per group is (negative store by descending index, zero bucket,
-    positive store by ascending index) — encoded as a packed sort key
+    Walk order per group is (negative store by descending index, zero
+    bucket, positive store by ascending index) — a packed sort key
     (key_id, part, ord) where ord = -index for the negative part. The rank
     walk 'first bucket whose cumulative exceeds q*(n-1)' becomes one global
     np.searchsorted over the partition-wide cumulative-count array with
-    per-group base offsets. Collapsing-store policies re-clamp per (group,
-    store) with segmented extremes. Matches DDSketch.java:353-388 semantics
-    exactly (verified against the scalar path in tests).
+    per-group base offsets. Matches DDSketch.java:353-388 semantics exactly
+    (verified against the scalar path in tests).
     """
     from ..mapping import mapping_from_kind
 
-    n_rows = len(pdf)
-    # the vectorized path assumes one sketch config; heterogeneous partials
-    # (e.g. checkpoints from two alphas unioned) must fail loudly like the
-    # scalar merge path does, not silently mix bucket spaces
-    for c in ("mapping_kind", "gamma", "index_offset", "store_policy", "max_bins", "has_exact"):
-        if pdf[c].nunique(dropna=False) > 1:
-            raise ValueError(
-                f"sketch rows are not mergeable: heterogeneous {c!r} values "
-                f"{pdf[c].unique()[:4].tolist()}"
-            )
+    keys, ident, kid, part, idx, counts, stats = _merge_sketch_frame(pdf, key_cols)
     mapping = mapping_from_kind(
-        pdf["mapping_kind"].iloc[0], float(pdf["gamma"].iloc[0]), float(pdf["index_offset"].iloc[0])
+        ident["mapping_kind"], float(ident["gamma"]), float(ident["index_offset"])
     )
-    policy = pdf["store_policy"].iloc[0]
-    max_bins = int(pdf["max_bins"].iloc[0])
-    track_stats = bool(pdf["has_exact"].iloc[0])
-    alpha = mapping.relative_accuracy
-
-    if len(key_cols) == 1:
-        codes, uniques = pd.factorize(pdf[key_cols[0]], use_na_sentinel=False)
-        key_frame = {key_cols[0]: np.asarray(uniques)}
-    else:
-        codes, uniques = pd.factorize(
-            pd.MultiIndex.from_frame(pdf[key_cols]), use_na_sentinel=False
-        )
-        key_frame = {
-            c: np.asarray([u[i] for u in uniques]) for i, c in enumerate(key_cols)
-        }
-    codes = codes.astype(np.int64)
-    n_keys = len(next(iter(key_frame.values())))
-
-    # flatten bucket arrays: (kid, part, idx, cnt) streams
-    def flat(col_idx, col_cnt, part):
-        lens = np.fromiter((len(x) for x in pdf[col_idx]), np.int64, n_rows)
-        if lens.sum() == 0:
-            return (np.empty(0, np.int64),) * 2 + (np.empty(0, np.float64),)
-        kid = np.repeat(codes, lens)
-        idx = np.concatenate([np.asarray(x, np.int64) for x in pdf[col_idx] if len(x)])
-        cnt = np.concatenate([np.asarray(x, np.float64) for x in pdf[col_cnt] if len(x)])
-        return kid, idx, cnt
-
-    kid_n, idx_n, cnt_n = flat("neg_idx", "neg_cnt", 0)
-    kid_p, idx_p, cnt_p = flat("pos_idx", "pos_cnt", 2)
-    zc = pdf["zero_count"].to_numpy(np.float64)
-    zc_sel = zc > 0
-
-    if policy in ("collapsing_lowest", "collapsing_highest"):
-        idx_n = _clamp_per_group(kid_n, idx_n, policy, max_bins)
-        idx_p = _clamp_per_group(kid_p, idx_p, policy, max_bins)
-
-    packed_parts, cnt_parts = [], []
-    if idx_n.size:
-        packed_parts.append((kid_n << 34) | (np.int64(0) << 32) | ((-idx_n) - _INT32_MIN))
-        cnt_parts.append(cnt_n)
-    if zc_sel.any():
-        packed_parts.append(
-            (codes[zc_sel] << 34) | (np.int64(1) << 32) | np.int64(-_INT32_MIN)
-        )
-        cnt_parts.append(zc[zc_sel])
-    if idx_p.size:
-        packed_parts.append((kid_p << 34) | (np.int64(2) << 32) | (idx_p - _INT32_MIN))
-        cnt_parts.append(cnt_p)
-
-    qs_arr = np.asarray(qs, np.float64)
-    out = dict(key_frame)
-    if not packed_parts:
+    n_keys = len(keys)
+    out = {}
+    if not kid.size:
         for n in q_names:
             out[n] = np.full(n_keys, math.nan)
         out.update(
@@ -658,31 +540,30 @@ def _vectorized_grouped_finalize(pdf, key_cols, qs, q_names, out_cols):
             min=np.full(n_keys, math.nan), max=np.full(n_keys, math.nan),
             avg=np.full(n_keys, math.nan),
         )
-        return pd.DataFrame(out, columns=out_cols)
+        return keys.assign(**out)[out_cols]
 
-    packed, counts = _group_sum(np.concatenate(packed_parts), np.concatenate(cnt_parts))
-    kid_row = (packed >> 34).astype(np.int64)
-    part_row = ((packed >> 32) & 3).astype(np.int64)
-    ord_row = (packed & 0xFFFFFFFF).astype(np.int64) + _INT32_MIN
-
-    values = np.zeros(packed.size)
-    neg_rows = part_row == 0
-    pos_rows = part_row == 2
+    # _merge_buckets sorts every store by ascending index; the walk reads
+    # the negative one descending
+    order = np.argsort(_pack(kid, part, np.where(part == 0, -idx, idx)), kind="stable")
+    kid, part, idx, counts = kid[order], part[order], idx[order], counts[order]
+    values = np.zeros(kid.size)
+    neg_rows = part == 0
+    pos_rows = part == 2
     if neg_rows.any():
-        values[neg_rows] = -np.asarray(mapping.value(-ord_row[neg_rows]), np.float64)
+        values[neg_rows] = -np.asarray(mapping.value(idx[neg_rows]), np.float64)
     if pos_rows.any():
-        values[pos_rows] = np.asarray(mapping.value(ord_row[pos_rows]), np.float64)
+        values[pos_rows] = np.asarray(mapping.value(idx[pos_rows]), np.float64)
 
-    # segment layout per key (packed sorted => kid contiguous ascending, but
-    # keys with no buckets are absent — map segments back to kid)
-    seg_change = np.nonzero(np.diff(kid_row))[0] + 1
+    # segment layout per key (kid contiguous ascending, but keys with no
+    # buckets are absent — map segments back to kid)
+    seg_change = np.nonzero(np.diff(kid))[0] + 1
     seg_starts = np.concatenate([[0], seg_change])
-    seg_kids = kid_row[seg_starts]
+    seg_kids = kid[seg_starts]
     cum = np.cumsum(counts)
     base = np.zeros(n_keys)
     seg_base = np.where(seg_starts > 0, cum[seg_starts - 1], 0.0)
     base[seg_kids] = seg_base
-    seg_ends_idx = np.concatenate([seg_change, [packed.size]]) - 1
+    seg_ends_idx = np.concatenate([seg_change, [kid.size]]) - 1
     totals = np.zeros(n_keys)
     totals[seg_kids] = cum[seg_ends_idx] - seg_base
     seg_start_of = np.zeros(n_keys, np.int64)
@@ -691,6 +572,7 @@ def _vectorized_grouped_finalize(pdf, key_cols, qs, q_names, out_cols):
     seg_end_of[seg_kids] = seg_ends_idx
 
     # ranks: (n_keys, Q); global targets = base + q*(n-1)
+    qs_arr = np.asarray(qs, np.float64)
     ranks = qs_arr.reshape(1, -1) * (totals.reshape(-1, 1) - 1.0)
     targets = base.reshape(-1, 1) + ranks
     pos_idx = np.searchsorted(cum, targets.ravel(), side="right").reshape(n_keys, -1)
@@ -702,16 +584,8 @@ def _vectorized_grouped_finalize(pdf, key_cols, qs, q_names, out_cols):
     if empty.any():
         qvals[empty, :] = math.nan
 
-    if track_stats:
-        st_count = np.zeros(n_keys)
-        st_sum = np.zeros(n_keys)
-        st_min = np.full(n_keys, math.inf)
-        st_max = np.full(n_keys, -math.inf)
-        np.add.at(st_count, codes, pdf["stat_count"].to_numpy(np.float64))
-        np.add.at(st_sum, codes, pdf["stat_sum"].to_numpy(np.float64))
-        np.add.at(st_sum, codes, -pdf["stat_sum_comp"].to_numpy(np.float64))
-        np.minimum.at(st_min, codes, pdf["stat_min"].to_numpy(np.float64))
-        np.maximum.at(st_max, codes, pdf["stat_max"].to_numpy(np.float64))
+    if ident["has_exact"]:
+        st_count, st_sum, _, st_min, st_max = stats
         qvals = np.clip(qvals, st_min.reshape(-1, 1), st_max.reshape(-1, 1))
         # empty groups (all-null values): count 0, NaN stats like SQL aggs
         none = st_count <= 0
@@ -724,7 +598,7 @@ def _vectorized_grouped_finalize(pdf, key_cols, qs, q_names, out_cols):
         count_out = totals
         # bucket-approx sum/min/max, vectorized per key
         sum_out = np.zeros(n_keys)
-        np.add.at(sum_out, kid_row, values * counts)
+        np.add.at(sum_out, kid, values * counts)
         min_out = np.full(n_keys, math.nan)
         max_out = np.full(n_keys, math.nan)
         min_out[seg_kids] = values[seg_starts]
@@ -741,7 +615,7 @@ def _vectorized_grouped_finalize(pdf, key_cols, qs, q_names, out_cols):
             max=max_out,
             avg=sum_out / count_out,
         )
-    return pd.DataFrame(out, columns=out_cols)
+    return keys.assign(**out)[out_cols]
 
 
 def _clamp_per_group(kid, idx, policy, max_bins):
@@ -920,9 +794,9 @@ def cdf_at_values(
         return df.sparkSession.sql(sql, __ddsparkle_src__=df)
 
     partials = build_partial_sketches(df, value_col, key_cols, config, weight_col)
-    # one merged sketch row per group through the vectorized merge pass
-    # (singleton groups free), then a single mapInPandas finalize over the
-    # merged rows — no per-group Python apply anywhere
+    # one merged sketch row per group through the vectorized merge pass,
+    # then a single mapInPandas finalize over the merged rows — no
+    # per-group Python apply anywhere
     merged = merge_partials_to_sketch_rows(partials, key_cols)
     return cdf_finalize_sketch_rows(merged, key_cols, xs, x_names)
 
@@ -1351,12 +1225,13 @@ def _sql_store_fragments(config, key_cols, value_col, weight_col) -> dict:
     bucket_val = f"EXP({i_term} / {mult}) * (1.0 + {a})"
 
     # exact stats ride along in the bucket aggregate (count, sum, min and
-    # max are distributive): NULLs never reach the kernel accept, but
-    # zero-weight non-NULL values DO move the exact extremes (sketch.py
-    # accept note), so min/max skip only NULLs
+    # max are distributive). Like the kernel builder, min/max see only rows
+    # that carry weight: a zero- or NULL-weight value is a no-op (sketch.py
+    # module note), and a NULL value has no weight to carry
     if config.track_exact_stats:
         stats = ", __sm, __mn, __mx"
-        leaf_stats = ", SUM(__v * __w) AS __sm, MIN(__v) AS __mn, MAX(__v) AS __mx"
+        live_v = "CASE WHEN __w > 0 THEN __v END"
+        leaf_stats = f", SUM(__v * __w) AS __sm, MIN({live_v}) AS __mn, MAX({live_v}) AS __mx"
         fold_stats = ", SUM(__sm) AS __sm, MIN(__mn) AS __mn, MAX(__mx) AS __mx"
     else:
         stats = leaf_stats = fold_stats = ""

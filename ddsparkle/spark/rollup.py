@@ -313,8 +313,9 @@ def build_payload_rollup(
 
 def _merge_payload_cells(src, cell_keys, from_payload):
     """One merged payload row per cell: repartition by the cell key + one
-    mapInPandas pass with singleton pass-through (the payload twin of
-    ``agg.merge_partials_to_sketch_rows``); shared by the payload-rollup
+    mapInPandas pass with singleton pass-through (the chassis of
+    ``agg.merge_partials_to_sketch_rows``, which merges every row through
+    the vectorized sketch merge instead); shared by the payload-rollup
     build and compaction."""
     import pandas as pd
 

@@ -1023,7 +1023,7 @@ def merge_consecutive_turns(df, text_col: str = "text", sep: str = "\n"):
 
     Scale shape: text moves exactly ONCE — ``repartition(conv_id)`` +
     JVM ``sortWithinPartitions`` + one ``mapInPandas`` pass (the
-    ``merge_partials_to_sketch_rows`` chassis, agg.py:342) whose run
+    ``agg.merge_partials_to_sketch_rows`` chassis) whose run
     detection and per-run joins are vectorized pandas over the whole
     partition. No window function, no second exchange, no per-group Python
     apply. conv_id skew: a hot conversation lands in one task but the work

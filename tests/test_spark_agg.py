@@ -8,7 +8,11 @@ import math
 import numpy as np
 import pytest
 
-from ddsparkle.config import SketchConfig, logarithmic_unbounded_dense
+from ddsparkle.config import (
+    SketchConfig,
+    logarithmic_collapsing_lowest_dense,
+    logarithmic_unbounded_dense,
+)
 from ddsparkle.spark.agg import (
     build_partial_sketches,
     finalize_row,
@@ -257,16 +261,18 @@ def test_collapsing_config_bounded_rows(spark, sf_dir):
     assert rank_interval_error(vals, 0.99, res["q99"]) <= ALPHA + EPS
 
 
-def test_spill_flush_same_results(spark, sf_dir):
-    """A tiny max_groups_per_task forces mid-stream flushes of mergeable
+def test_spill_flush_same_results(spark, sf_dir, monkeypatch):
+    """A tiny _MAX_GROUPS_PER_TASK forces mid-stream flushes of mergeable
     partials; results must be identical to the unbounded path."""
+    from ddsparkle.spark import agg
     from ddsparkle.spark.agg import _finalize_schema  # noqa: F401 (import check)
     from ddsparkle.config import SketchConfig
 
     df = spark.read.parquet(f"{sf_dir}/orders.parquet")
     cfg = SketchConfig(mapping_kind="log")
     a = build_partial_sketches(df, "o_totalprice", ["o_custkey"], cfg)
-    b = build_partial_sketches(df, "o_totalprice", ["o_custkey"], cfg, max_groups_per_task=5)
+    monkeypatch.setattr(agg, "_MAX_GROUPS_PER_TASK", 5)
+    b = build_partial_sketches(df, "o_totalprice", ["o_custkey"], cfg)
     assert b.count() >= a.count()  # spills create extra mergeable rows
     ra = {r["o_custkey"]: r for r in merge_rows_df(spark, a)}
     rb = {r["o_custkey"]: r for r in merge_rows_df(spark, b)}
@@ -632,6 +638,109 @@ def test_sql_mode_grouped_collapse_parity(spark, policy, stats):
         assert a.equals(b), (w, a, b)
         assert a["k"].isna().sum() == 1 and set(a["k"].dropna()) == {"a", "b", "c", "n", "z"}
 
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [SketchConfig(mapping_kind="log"), logarithmic_collapsing_lowest_dense()],
+    ids=["log-unbounded", "log-collapsing-lowest"],
+)
+def test_sql_mode_exact_stats_skip_weightless_rows(spark, cfg):
+    """A zero- or NULL-weight value moves neither exact extreme in either
+    mode: mode='sql' equals the kernel exactly, globally and by key. (The
+    extreme quantiles are exact-stat clamps or the index-0 bucket; an
+    interior bucket value may differ by one ulp between JVM and NumPy exp.)"""
+    import pandas as pd
+
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            [("a", 1.0, 1.0), ("a", 5.0, 1.0), ("a", 100.0, 0.0), ("b", -50.0, None), ("b", 3.0, 1.0)],
+            columns=["k", "v", "w"],
+        ),
+        "k string, v double, w double",
+    )
+    for by in (None, "k"):
+        got = {}
+        for mode in ("kernel", "sql"):
+            res = quantiles(df, "v", by=by, qs=(0.0, 1.0), config=cfg, weight_col="w", mode=mode)
+            got[mode] = res.toPandas().sort_values(by or "count").reset_index(drop=True)
+        assert got["kernel"].equals(got["sql"]), (by, got)
+        assert got["kernel"]["min"].tolist() == ([1.0] if by is None else [1.0, 3.0])
+        assert got["kernel"]["max"].tolist() == ([5.0] if by is None else [5.0, 3.0])
+
+
+@pytest.mark.parametrize("stats", [True, False], ids=["stats", "no-stats"])
+@pytest.mark.parametrize(
+    "policy", ["unbounded", "sparse", "collapsing_lowest", "collapsing_highest"]
+)
+def test_merged_rows_equal_scalar_fold(spark, policy, stats):
+    """merge_partials_to_sketch_rows equals the scalar fold
+    ``sketch_to_row(merge_rows(rows))`` per key, by one key, by two keys and
+    keyless, weighted and unweighted: bucket indexes and counts, zero count
+    and exact count/min/max exactly; the exact sum (a plain sum here, a
+    Kahan fold there) to float reassociation."""
+    from pyspark.sql import functions as F
+
+    from ddsparkle.serde import sketch_to_row
+
+    df = _mixed_sign_groups(spark).withColumn("k2", F.abs(F.hash("v")) % 3).repartition(3)
+    cfg = SketchConfig(mapping_kind="log", store_policy=policy, max_bins=8,
+                       track_exact_stats=stats)
+    for w in (None, "w"):
+        for keys in (["k"], ["k", "k2"], []):
+            partials = build_partial_sketches(df, "v", keys, cfg, w).localCheckpoint()
+            groups: dict = {}
+            for r in partials.collect():
+                groups.setdefault(tuple(r[c] for c in keys), []).append(r.asDict())
+            assert max(map(len, groups.values())) > 1  # some key really merges
+            got = {
+                tuple(r[c] for c in keys): r.asDict()
+                for r in merge_partials_to_sketch_rows(partials, keys).collect()
+            }
+            assert set(got) == set(groups), (w, keys)
+            for key, rows in groups.items():
+                want, g = sketch_to_row(merge_rows(rows)), got[key]
+                ctx = (w, keys, key)
+                for f in ("neg_idx", "neg_cnt", "pos_idx", "pos_cnt"):
+                    assert list(g[f]) == np.asarray(want[f]).tolist(), (ctx, f)
+                for f in ("zero_count", "stat_count", "stat_min", "stat_max", "has_exact"):
+                    assert g[f] == want[f], (ctx, f)
+                assert g["stat_sum"] == pytest.approx(
+                    want["stat_sum"] - want["stat_sum_comp"], rel=1e-9
+                ), ctx
+
+
+def test_merge_rejects_mixed_exact_stats(spark):
+    """Rows with and without exact stats do not merge silently: the merge
+    raises like the finalize does."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(20).select(F.lit("a").alias("k"), F.col("id").cast("double").alias("v"))
+    mixed = build_partial_sketches(df, "v", ["k"], SketchConfig(mapping_kind="log")).unionByName(
+        build_partial_sketches(df, "v", ["k"], SketchConfig(mapping_kind="log", track_exact_stats=False))
+    )
+    with pytest.raises(Exception, match="heterogeneous 'has_exact'"):
+        merge_partials_to_sketch_rows(mixed, ["k"]).collect()
+
+
+@pytest.mark.parametrize("stats", [True, False], ids=["stats", "no-stats"])
+def test_all_null_keyless_input_one_count0_row(spark, stats):
+    """A keyless input of only NULL values gives one count-0 row from
+    quantiles and cdf_at_values in both modes (an empty input gives none:
+    test_empty_input)."""
+    from ddsparkle.spark.agg import cdf_at_values
+
+    df = spark.createDataFrame([(None,), (None,), (None,)], "v double")
+    cfg = SketchConfig(mapping_kind="log", track_exact_stats=stats)
+    for mode in ("kernel", "sql"):
+        for res, est in (
+            (quantiles(df, "v", qs=(0.5,), config=cfg, mode=mode), "q50"),
+            (cdf_at_values(df, "v", [1.0], config=cfg, mode=mode), "cdf_1"),
+        ):
+            rows = res.collect()
+            assert len(rows) == 1, (mode, est, rows)
+            assert rows[0]["count"] == 0.0, (mode, est)
+            assert rows[0][est] is None or math.isnan(rows[0][est]), (mode, est)
 
 def _sql_generators(by, collapsing="collapsing_lowest"):
     from ddsparkle.spark.agg import (
