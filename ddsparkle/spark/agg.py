@@ -396,12 +396,15 @@ def quantiles(
         # the log mapping's index math is closed-form in SQL, so the whole
         # aggregation runs as one Catalyst plan with no Python worker
         # (hash-identical to the kernel path across the oracle gate suite;
-        # see _catalyst_quantiles). It is not faster at every shape: on a
-        # 4-core host (local[4], one log config, value = text length) the
-        # kernel took 0.39-0.51 s against sql's 0.54-0.74 s at 50k rows,
-        # global or by 4 groups, while at 1M rows by 100k groups sql took
-        # 3.3-3.8 s against the kernel's 5.6-6.5 s. The rule stays "log
-        # mapping -> sql" until a measured crossover replaces it.
+        # see _catalyst_quantiles). It is not faster at every shape. On a
+        # 4-core host (local[4], one log config, value = text length, mode
+        # pinned, one session) the kernel took 0.22-0.37 s global and
+        # 0.32-0.38 s by 4 groups at 50k rows, against sql's 0.45-0.62 s
+        # and 0.44-0.61 s. At 1M rows the two tie globally (kernel
+        # 1.06-1.25 s, sql 1.08-1.44 s), sql wins by 4 groups (1.16-1.22 s
+        # against 1.27-1.40 s) and the kernel by 100k groups (2.8-3.0 s
+        # against 3.1-3.5 s). The rule stays "log mapping -> sql" until a
+        # measured crossover replaces it.
         # Interpolated mappings need frexp bit access, so they keep the
         # Arrow-vectorized kernel path.
         mode = "sql" if sql_mode_eligible(config, stats_final=True) else "kernel"

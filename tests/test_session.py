@@ -1,7 +1,10 @@
 """Session factory: Python workers import pyspark from the same directory
-install as the driver, not from Spark's zip archives
-(``ddsparkle.spark.pydaemon``)."""
+install as the driver, not from Spark's zip archives, and fork from a frozen
+heap (``ddsparkle.spark.pydaemon``); local masters talk to them over Unix
+sockets in a private directory; shuffle partitions follow the master's
+cores."""
 
+import json
 import os
 import subprocess
 import sys
@@ -13,6 +16,7 @@ import pyspark
 import pytest
 
 from ddsparkle.spark.pydaemon import drop_spark_archives
+from ddsparkle.spark.session import local_cores
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -66,3 +70,85 @@ def test_drop_spark_archives_only_when_a_directory_install_remains(tmp_path, mon
         assert sys.path == after
         kept = [f for f in sys.path_importer_cache.values() if isinstance(f, zipimport.zipimporter)]
         assert len(kept) == (0 if after == site else len(archives))
+
+
+@pytest.mark.parametrize(
+    "master, cores",
+    [
+        ("local", 1),
+        ("local[3]", 3),
+        ("local[3,2]", 3),
+        ("local[3 , 2]", 3),
+        ("local[*]", os.cpu_count()),
+        ("local[*,4]", os.cpu_count()),
+        ("local-cluster[2,3,1024]", 6),
+        ("spark://host:7077", None),
+        ("yarn", None),
+        ("local[x]", None),
+        ("localhost", None),
+    ],
+)
+def test_local_cores(master, cores):
+    assert local_cores(master) == cores
+
+
+@pytest.mark.spark
+def test_workers_use_unix_sockets_and_a_frozen_heap(spark):
+    """A reused worker talks to the JVM over a Unix socket and inherits the
+    daemon's frozen heap, so pyspark.daemon's per-task ``gc.collect()``
+    walks only what the worker made since the fork."""
+    from ddsparkle.spark.agg import quantiles
+
+    df = spark.createDataFrame([(i % 4, float(i)) for i in range(64)], "k long, v double")
+    quantiles(df.repartition(4), "v", by="k", mode="kernel").collect()
+
+    def probe(batches):
+        import gc
+        import os
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({
+            "uds": [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED")],
+            "frozen": [gc.get_freeze_count()],
+            "tracked": [len(gc.get_objects())],
+        })
+
+    rows = spark.range(8, numPartitions=4).mapInPandas(
+        probe, "uds string, frozen long, tracked long"
+    ).collect()
+    assert {r["uds"].lower() for r in rows} == {"true"}
+    assert min(r["frozen"] for r in rows) > 0
+    assert max(r["tracked"] for r in rows) < 5000
+
+
+def test_socket_dir_is_private_short_and_removed(tmp_path):
+    """A session whose temp dirs are too long for an AF_UNIX path still runs
+    a Python task: its sockets live in a private /tmp directory that is
+    gone once the driver exits."""
+    long_tmp = tmp_path / ("t" * max(1, 86 - len(str(tmp_path))))
+    long_tmp.mkdir()
+    assert len(str(long_tmp)) >= 86
+    code = f"""
+import json, os, stat
+from ddsparkle.spark.session import get_spark
+
+spark = get_spark(master="local[1]", extra_conf={{
+    "spark.ui.enabled": "false",
+    "spark.driver.memory": "1g",
+    "spark.driver.extraJavaOptions": "-Djava.io.tmpdir={long_tmp}",
+}})
+d = spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir")
+n = spark.range(1).mapInPandas(lambda it: (b for b in it), "id long").count()
+print(json.dumps({{"dir": d, "mode": stat.S_IMODE(os.stat(d).st_mode), "rows": n}}))
+"""
+    env = {**os.environ, "TMPDIR": str(long_tmp)}
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=ROOT, env=env, check=True,
+        capture_output=True, text=True, timeout=300,
+    ).stdout
+    got = json.loads(out.strip().splitlines()[-1])
+    assert got["rows"] == 1
+    assert got["mode"] == 0o700
+    assert len(got["dir"]) + len("/.00000000-0000-0000-0000-000000000000.sock") <= 107
+    assert not os.path.exists(got["dir"])
