@@ -1,6 +1,10 @@
-"""Distributed aggregation for the non-quantile sketch family (HLL, CMS,
-Bloom) on the DDSketch chassis: mapInPandas partial build per task (binary
-payload rows, no raw-row shuffle) -> groupBy.applyInPandas merge+finalize.
+"""Distributed aggregation for the payload sketches (HLL, CMS, Bloom, KLL,
+t-digest, KMV, AMS, count sketch, Misra-Gries, reservoir) on the DDSketch
+chassis: mapInPandas partial build per task (one binary payload row per
+(task, key), no raw-row shuffle), then ``_fold_payloads`` — a repartition by
+key plus one mapInPandas that merges every key of a partition and optionally
+finalizes it. Keyless sketches returned to the driver fold there
+(``_reduce_payloads``).
 """
 
 from __future__ import annotations
@@ -44,14 +48,14 @@ def _build_payload_partials(df, value_col: str, key_cols: Sequence[str], make, u
                     if sk is None:
                         sk = acc[key] = make()
                     update(sk, values.iloc[rows_idx])
-            else:
-                v = values[valid]
-                if len(v) == 0:
-                    continue
+            elif len(pdf):
+                # a keyless task that saw only NULLs still emits the empty
+                # sketch, so all-NULL input finalizes to one count-0 row
                 sk = acc.get(())
                 if sk is None:
                     sk = acc[()] = make()
-                update(sk, v)
+                if valid.any():
+                    update(sk, values[valid])
         rows = []
         for key, sk in acc.items():
             row = dict(zip(key_cols, key))
@@ -66,73 +70,88 @@ def _build_payload_partials(df, value_col: str, key_cols: Sequence[str], make, u
     return projected.mapInPandas(build, schema=schema)
 
 
-def _reduce_payloads(partials, from_payload, fan_in: int = 64):
-    """Fold per-task payload rows into ONE sketch without an unbounded fan-in
-    anywhere: a salted executor-side reduce stage merges the #tasks payloads
-    within ``fan_in`` groups (each reducer folds ~#tasks/fan_in payloads),
-    then the driver folds only the <= fan_in survivors. Collecting raw
-    per-task payloads would put #tasks x payload-size bytes on the driver —
-    GBs at 10^5-10^6 tasks. Returns None when ``partials`` is empty."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for payload in pdf["payload"]:
-            cur = from_payload(bytes(payload))
-            if acc is None:
-                acc = cur
-            else:
-                acc.merge(cur)
-        return pd.DataFrame({"payload": [acc.to_bytes()]})
-
-    if partials.rdd.getNumPartitions() <= fan_in:
-        # already within the driver's fan-in bound (keyless stage 1 emits
-        # one payload row per task): the reduce stage would only add a
-        # shuffle for the same <= fan_in rows
-        rows = partials.collect()
-    else:
-        salted = partials.withColumn(
-            "__s", F.pmod(F.spark_partition_id(), F.lit(fan_in)).cast("int")
-        )
-        rows = (
-            salted.groupBy("__s")
-            .applyInPandas(_fold, T.StructType([T.StructField("payload", T.BinaryType())]))
-            .collect()
-        )
-    acc = None
-    for r in rows:
-        cur = from_payload(bytes(r["payload"]))
-        if acc is None:
-            acc = cur
+def _merge_payloads(payloads, from_payload):
+    """Scalar fold of serialized payloads into one sketch (None when there
+    are none). Every payload sketch's ``merge`` mutates in place."""
+    sk = None
+    for payload in payloads:
+        cur = from_payload(bytes(payload))
+        if sk is None:
+            sk = cur
         else:
-            acc.merge(cur)
-    return acc
+            sk.merge(cur)
+    return sk
 
 
-def _merge_finalize(partials, key_cols: Sequence[str], out_fields, from_payload, finalize_row):
-    from pyspark.sql import functions as F
+# At most this many payload rows reach the driver fold in _reduce_payloads;
+# above that many partitions a fold keyed on partition id mod _FAN_IN runs
+# first.
+_FAN_IN = 64
+
+
+def _fold_payloads(partials, key_cols: Sequence[str], from_payload, finalize=None, out_fields=None):
+    """Merge payload rows to one sketch per key: a repartition by the keys
+    (to one partition when keyless), then one mapInPandas that groups each
+    partition's rows by key and folds their payloads — no per-group Python
+    apply, no sort. Without ``finalize`` emits ``[*key_cols, payload]``, a
+    key with one partial passing through unparsed. With it, emits
+    ``[*key_cols, *out_fields]``: ``finalize(sketch)`` returns the key's
+    output rows as a list of dicts."""
     from pyspark.sql import types as T
 
     key_cols = list(key_cols)
-    group_keys = key_cols or ["__g"]
-    src = partials if key_cols else partials.withColumn("__g", F.lit(0))
-    schema = T.StructType([src.schema[c] for c in group_keys] + out_fields)
+    src = partials.select(*key_cols, "payload")
+    parted = src.repartition(*[src[c] for c in key_cols]) if key_cols else src.repartition(1)
+    if finalize is None:
+        schema = src.schema
+    else:
+        schema = T.StructType([src.schema[c] for c in key_cols] + list(out_fields))
+    cols = schema.fieldNames()
 
-    def fin(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = None
-        for payload in pdf["payload"]:
-            cur = from_payload(bytes(payload))
-            if sk is None:
-                sk = cur
+    def fold(batches):
+        pdfs = [p for p in batches if len(p)]
+        if not pdfs:
+            return
+        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+        if finalize is None and key_cols:
+            # keys with one partial pass through unparsed, with no Python
+            # call per key
+            dup = pdf.duplicated(key_cols, keep=False)
+            yield pdf[~dup]
+            pdf = pdf[dup]
+        groups = (
+            pdf.groupby(key_cols, sort=False, dropna=False)["payload"]
+            if key_cols
+            else [((), pdf["payload"])]
+        )
+        rows = []
+        for key, payloads in groups:
+            sk = _merge_payloads(payloads, from_payload)
+            keys = dict(zip(key_cols, key))
+            if finalize is None:
+                rows.append({**keys, "payload": sk.to_bytes()})
             else:
-                sk.merge(cur)
-        row = {c: pdf[c].iloc[0] for c in group_keys}
-        row.update(finalize_row(sk))
-        return pd.DataFrame([row])
+                rows.extend({**keys, **r} for r in finalize(sk))
+        if rows:
+            yield pd.DataFrame(rows, columns=cols)
 
-    out = src.groupBy(*group_keys).applyInPandas(fin, schema=schema)
-    return out.drop("__g") if not key_cols else out
+    return parted.mapInPandas(fold, schema=schema)
+
+
+def _reduce_payloads(partials, from_payload):
+    """Fold keyless per-task payload rows into ONE sketch on the driver
+    without an unbounded fan-in anywhere: up to ``_FAN_IN`` partitions the
+    driver folds the collected rows directly; above it, ``_fold_payloads``
+    first merges them into ``_FAN_IN`` groups by partition id. Collecting
+    raw per-task payloads would put #tasks x payload-size bytes on the
+    driver — GBs at 10^5-10^6 tasks. Returns None when ``partials`` is
+    empty."""
+    from pyspark.sql import functions as F
+
+    if partials.rdd.getNumPartitions() > _FAN_IN:
+        salted = partials.withColumn("__s", F.pmod(F.spark_partition_id(), F.lit(_FAN_IN)))
+        partials = _fold_payloads(salted, ["__s"], from_payload)
+    return _merge_payloads((r["payload"] for r in partials.collect()), from_payload)
 
 
 def hll_distinct(df, value_col: str, by: Optional[str] = None, p: int = 14, seed: int = 0):
@@ -157,15 +176,10 @@ def hll_distinct(df, value_col: str, by: Optional[str] = None, p: int = 14, seed
     ]
 
     def finalize(sk):
-        if sk is None:
-            return {"distinct_est": 0.0, "rse": 0.0}
-        return {
-            "distinct_est": float(sk.estimate()),
-            "rse": sk.relative_standard_error,
-        }
+        return [{"distinct_est": float(sk.estimate()), "rse": sk.relative_standard_error}]
 
-    return _merge_finalize(
-        partials, keys, out_fields, lambda b: HyperLogLog.from_bytes(b, p, seed), finalize
+    return _fold_payloads(
+        partials, keys, lambda b: HyperLogLog.from_bytes(b, p, seed), finalize, out_fields
     )
 
 
@@ -197,24 +211,16 @@ def cms_frequencies(
         T.StructField("est_freq", T.DoubleType()),
     ]
 
-    from pyspark.sql import functions as F
+    def finalize(sk):
+        ests = sk.query(pd.Series(probes))
+        return [{"probe": str(p), "est_freq": float(e)} for p, e in zip(probes, ests)]
 
-    key_cols: list[str] = []
-    group_keys = ["__g"]
-    srcp = partials.withColumn("__g", F.lit(0))
-    schema = T.StructType([srcp.schema["__g"]] + out_fields)
-
-    def fin(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = None
-        for payload in pdf["payload"]:
-            cur = CountMinSketch.from_bytes(bytes(payload), depth, width, seed)
-            sk = cur if sk is None else (sk.merge(cur) or sk)
-        ests = sk.query(pd.Series(probes)) if sk is not None else np.zeros(len(probes))
-        return pd.DataFrame(
-            {"__g": 0, "probe": [str(p) for p in probes], "est_freq": ests.astype(float)}
-        )
-
-    return srcp.groupBy(*group_keys).applyInPandas(fin, schema=schema).drop("__g")
+    return _fold_payloads(
+        partials, [],
+        lambda b: CountMinSketch.from_bytes(b, depth, width, seed),
+        finalize,
+        out_fields,
+    )
 
 
 def bloom_membership(
@@ -285,12 +291,12 @@ def _quantile_family_agg(df, value_col: str, by, qs, make, from_bytes, q_prefix=
     ]
 
     def finalize(sk):
-        if sk is None:
-            return {**{n: float("nan") for n in q_names}, "count": 0.0}
+        if sk.n == 0:
+            return [{**{n: float("nan") for n in q_names}, "count": 0.0}]
         vals = sk.values_at_quantiles(qs)
-        return {**{n: float(v) for n, v in zip(q_names, vals)}, "count": float(sk.n)}
+        return [{**{n: float(v) for n, v in zip(q_names, vals)}, "count": float(sk.n)}]
 
-    return _merge_finalize(partials, keys, out_fields, from_bytes, finalize)
+    return _fold_payloads(partials, keys, from_bytes, finalize, out_fields)
 
 
 def kll_quantiles(df, value_col: str, by=None, qs=(0.5, 0.95, 0.99), k: int = 200):
@@ -380,24 +386,12 @@ def kmv_overlap_matrix(df, value_col: str, group_col: str, k: int = 4096, seed: 
         update=lambda sk, v: sk.update(v),
     )
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = None
-        for payload in pdf["payload"]:
-            cur = KMVSketch.from_bytes(bytes(payload), seed=seed)
-            sk = cur if sk is None else (sk.merge(cur) or sk)
-        return pd.DataFrame(
-            {group_col: [pdf[group_col].iloc[0]], "payload": [sk.to_bytes()]}
-        )
+    def from_payload(b):
+        return KMVSketch.from_bytes(b, seed=seed)
 
-    folded = partials.groupBy(group_col).applyInPandas(
-        fold,
-        T.StructType(
-            [partials.schema[group_col], T.StructField("payload", T.BinaryType())]
-        ),
-    )
     sketches = {
-        r[group_col]: KMVSketch.from_bytes(bytes(r["payload"]), seed=seed)
-        for r in folded.collect()
+        r[group_col]: from_payload(bytes(r["payload"]))
+        for r in _fold_payloads(partials, [group_col], from_payload).collect()
     }
     rows = []
     for ga in sorted(sketches):
@@ -614,8 +608,8 @@ def dgim_window_counts(
     a live deployment holds the same O(r*log W) bucket state per key in a
     stateful streaming op. For fine key grids (millions of tiny series)
     route through repartition+mapInPandas with a pandas groupby instead of
-    applyInPandas's ~1ms/group Python overhead (the
-    merge_partials_to_sketch_rows pattern)."""
+    applyInPandas's ~1ms/group Python overhead (the ``_fold_payloads``
+    pattern)."""
     from pyspark.sql import functions as F
 
     from ..sketches.dgim import DgimSketch

@@ -133,7 +133,8 @@ def _probe_side(
     flush_distincts: int = 1 << 18,
 ) -> _JoinProbe:
     """One scan: NULL keys dropped (an equijoin never matches them), one
-    payload row per task, salted fan-in reduce (approx._reduce_payloads).
+    payload row per task, folded on the driver by approx._reduce_payloads
+    (behind a partition-keyed fold above approx._FAN_IN tasks).
 
     Per-partition batches pre-aggregate to (key, count) before touching
     the sketches: the AMS Horner pass costs n_counters x distinct COLUMNS,

@@ -271,11 +271,12 @@ def build_payload_rollup(
       the final cells and no merge stage runs.
     - otherwise the DDSketch rollup's shape: raw rows never shuffle
       (stage-1 per-task payloads keyed by cell), the exchange carries one
-      payload row per (task, cell), and cells merge via one pandas pass
-      with singleton pass-through."""
+      payload row per (task, cell), and cells merge in
+      ``approx._fold_payloads`` (repartition by cell + one mapInPandas,
+      a cell with one partial passing through unparsed)."""
     from pyspark.sql import functions as F
 
-    from .approx import _build_payload_partials
+    from .approx import _build_payload_partials, _fold_payloads
 
     if granularity not in _GRANULARITIES:
         raise ValueError(f"granularity {granularity!r}; one of {_GRANULARITIES}")
@@ -308,44 +309,7 @@ def build_payload_rollup(
         sel = sel.repartition(target, *[F.col(c) for c in cell_keys])
         return _build_payload_partials(sel, value_col, cell_keys, make, update)
     partials = _build_payload_partials(sel, value_col, cell_keys, make, update)
-    return _merge_payload_cells(partials, cell_keys, from_payload)
-
-
-def _merge_payload_cells(src, cell_keys, from_payload):
-    """One merged payload row per cell: repartition by the cell key + one
-    mapInPandas pass with singleton pass-through (the chassis of
-    ``agg.merge_partials_to_sketch_rows``, which merges every row through
-    the vectorized sketch merge instead); shared by the payload-rollup
-    build and compaction."""
-    import pandas as pd
-
-    schema = src.schema
-    cols = list(schema.fieldNames())
-
-    def fold(batches):
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        dup = pdf.duplicated(cell_keys, keep=False)
-        singles = pdf[~dup]
-        if len(singles):
-            yield singles[cols]
-        if not dup.any():
-            return
-        rows = []
-        for key, grp in pdf[dup].groupby(cell_keys, sort=False, dropna=False):
-            acc = None
-            for payload in grp["payload"]:
-                cur = from_payload(bytes(payload))
-                acc = cur if acc is None else (acc.merge(cur) or acc)
-            key_t = key if isinstance(key, tuple) else (key,)
-            row = dict(zip(cell_keys, key_t))
-            row["payload"] = acc.to_bytes()
-            rows.append(row)
-        yield pd.DataFrame(rows, columns=cols)
-
-    return src.repartition(*[src[c] for c in cell_keys]).mapInPandas(fold, schema=schema)
+    return _fold_payloads(partials, cell_keys, from_payload)
 
 
 def hll_rollup(
@@ -391,30 +355,20 @@ def rollup_distinct(
     from pyspark.sql import types as T
 
     from ..sketches.hll import HyperLogLog
-    from .approx import _merge_finalize
+    from .approx import _fold_payloads
 
     key_cols = [by] if isinstance(by, str) else list(by or [])
     sel = _apply_time_filter(rollup, start, end)
-    drop = [
-        c
-        for c in (BUCKET_COL, DAY_COL, BATCH_COL)
-        if c in sel.columns and c not in key_cols
-    ]
-    sel = sel.drop(*drop)
     out_fields = [
         T.StructField("distinct_est", T.DoubleType()),
         T.StructField("rse", T.DoubleType()),
     ]
 
     def finalize(sk):
-        return {
-            "distinct_est": float(sk.estimate()),
-            "rse": sk.relative_standard_error,
-        }
+        return [{"distinct_est": float(sk.estimate()), "rse": sk.relative_standard_error}]
 
-    return _merge_finalize(
-        sel, key_cols, out_fields,
-        lambda b: HyperLogLog.from_bytes(b, p, seed), finalize,
+    return _fold_payloads(
+        sel, key_cols, lambda b: HyperLogLog.from_bytes(b, p, seed), finalize, out_fields
     )
 
 
@@ -462,7 +416,7 @@ def rollup_frequencies(
     from pyspark.sql import types as T
 
     from ..sketches.countmin import CountMinSketch
-    from .approx import _merge_finalize
+    from .approx import _fold_payloads
 
     # Query with the ORIGINAL probe values: hash_pandas_object canonicalizes
     # numerics and strings differently, so coercing probes to str before
@@ -473,23 +427,19 @@ def rollup_frequencies(
     names = [f"freq_{p}" for p in probes]
     key_cols = [by] if isinstance(by, str) else list(by or [])
     sel = _apply_time_filter(rollup, start, end)
-    drop = [
-        c
-        for c in (BUCKET_COL, DAY_COL, BATCH_COL)
-        if c in sel.columns and c not in key_cols
-    ]
-    sel = sel.drop(*drop)
     out_fields = [T.StructField(n, T.DoubleType()) for n in names]
 
     def finalize(sk):
         import pandas as pd
 
         ests = sk.query(pd.Series(probes))
-        return {n: float(e) for n, e in zip(names, ests)}
+        return [{n: float(e) for n, e in zip(names, ests)}]
 
-    return _merge_finalize(
-        sel, key_cols, out_fields,
-        lambda b: CountMinSketch.from_bytes(b, depth, width, seed), finalize,
+    return _fold_payloads(
+        sel, key_cols,
+        lambda b: CountMinSketch.from_bytes(b, depth, width, seed),
+        finalize,
+        out_fields,
     )
 
 
@@ -538,27 +488,21 @@ def rollup_tdigest_quantiles(
 
     from ..sketches.tdigest import TDigest
     from .agg import quantile_column_name
-    from .approx import _merge_finalize
+    from .approx import _fold_payloads
 
     qs = [float(q) for q in qs]
     q_names = [quantile_column_name(q) for q in qs]
     key_cols = [by] if isinstance(by, str) else list(by or [])
     sel = _apply_time_filter(rollup, start, end)
-    drop = [
-        c
-        for c in (BUCKET_COL, DAY_COL, BATCH_COL)
-        if c in sel.columns and c not in key_cols
-    ]
-    sel = sel.drop(*drop)
     out_fields = [T.StructField(n, T.DoubleType()) for n in q_names] + [
         T.StructField("count", T.DoubleType())
     ]
 
     def finalize(sk):
         vals = sk.values_at_quantiles(qs)
-        return {**{n: float(v) for n, v in zip(q_names, vals)}, "count": float(sk.n)}
+        return [{**{n: float(v) for n, v in zip(q_names, vals)}, "count": float(sk.n)}]
 
-    return _merge_finalize(sel, key_cols, out_fields, TDigest.from_bytes, finalize)
+    return _fold_payloads(sel, key_cols, TDigest.from_bytes, finalize, out_fields)
 
 
 def rollup_cdf(
@@ -578,12 +522,6 @@ def rollup_cdf(
 
     key_cols = [by] if isinstance(by, str) else list(by or [])
     sel = _apply_time_filter(rollup, start, end)
-    drop = [
-        c
-        for c in (BUCKET_COL, DAY_COL, BATCH_COL)
-        if c in sel.columns and c not in key_cols
-    ]
-    sel = sel.drop(*drop)
     merged = merge_partials_to_sketch_rows(sel, key_cols)
     return cdf_finalize_sketch_rows(merged, key_cols, xs, x_names)
 
@@ -593,6 +531,8 @@ def compact_payload_rollup(rollup, from_payload, granularity: str = "day"):
     cells into daily ones by merging payloads — no raw data touched, and
     register-exactness makes the compacted table answer identically."""
     from pyspark.sql import functions as F
+
+    from .approx import _fold_payloads
 
     if granularity not in _GRANULARITIES:
         raise ValueError(f"granularity {granularity!r}; one of {_GRANULARITIES}")
@@ -606,7 +546,7 @@ def compact_payload_rollup(rollup, from_payload, granularity: str = "day"):
         *key_cols,
         "payload",
     )
-    return _merge_payload_cells(src, [BUCKET_COL, *key_cols], from_payload)
+    return _fold_payloads(src, [BUCKET_COL, *key_cols], from_payload)
 
 
 def compact_rollup(rollup, granularity: str = "day"):
@@ -753,16 +693,20 @@ def rollup_distinct_sliding(
     (shorter at the head of the series).
     """
     from ..sketches.hll import HyperLogLog
+    from .approx import _fold_payloads
 
+    def from_payload(b):
+        return HyperLogLog.from_bytes(b, p, seed)
+
+    # one payload per bucket first: a rollup with dimensions or appended
+    # batches stores several cells per bucket
+    per_bucket = _fold_payloads(rollup.select(BUCKET_COL, "payload"), [BUCKET_COL], from_payload)
     rows = sorted(
-        (
-            (r[BUCKET_COL], bytes(r["payload"]))
-            for r in rollup.select(BUCKET_COL, "payload").collect()
-        ),
+        ((r[BUCKET_COL], bytes(r["payload"])) for r in per_bucket.collect()),
         key=lambda t: t[0],
     )
     spark_rows = []
-    sketches = [HyperLogLog.from_bytes(b, p, seed) for _, b in rows]
+    sketches = [from_payload(b) for _, b in rows]
     for i, (bucket, _) in enumerate(rows):
         merged = HyperLogLog(p=p, seed=seed)
         for sk in sketches[max(0, i - window_buckets + 1) : i + 1]:
@@ -779,6 +723,6 @@ def rollup_distinct_sliding(
             T.StructField("rse", T.DoubleType()),
         ]
     )
-    # rollup frames carry at most #buckets x #dims rows; one driver fold
-    # over them is the standard sketch-finalize class, not a corpus collect
+    # the driver holds one payload per bucket; sliding unions over them are
+    # the standard sketch-finalize class, not a corpus collect
     return rollup.sparkSession.createDataFrame(spark_rows, schema)

@@ -2,8 +2,11 @@
 partition invariance, grouped paths.
 """
 
+import numpy as np
+import pandas as pd
 import pytest
 
+from ddsparkle.sketches import HyperLogLog
 from ddsparkle.spark.approx import bloom_membership, cms_frequencies, hll_distinct
 
 pytestmark = pytest.mark.spark
@@ -156,3 +159,129 @@ def test_kmv_overlap_matrix_exact_when_unsaturated(spark):
     m = kmv_overlap_matrix(big, "v", "g", k=64).collect()[0]
     assert abs(m["distinct_a"] - 3000) <= 4 * m["rse"] * 3000
     assert abs(m["intersection"] - 1500) <= 0.5 * 1500 + 64  # coarse sanity
+
+
+def test_keyless_all_null_input_gives_one_row(spark):
+    """A keyless sketch over rows that are all NULL finalizes to one
+    count-0 row (CMS: one row per probe), as DDSketch's paths do; an empty
+    input still gives no rows."""
+    from pyspark.sql import functions as F
+
+    from ddsparkle.spark.approx import kll_quantiles, tdigest_quantiles
+
+    df = spark.range(3).select(
+        F.lit(None).cast("string").alias("s"), F.lit(None).cast("double").alias("x")
+    ).repartition(2)
+    assert [r.asDict() for r in hll_distinct(df, "s").collect()] == [
+        {"distinct_est": 0.0, "rse": pytest.approx(1.04 / 2**7)}
+    ]
+    for fn in (kll_quantiles, tdigest_quantiles):
+        (row,) = fn(df, "x", qs=(0.5,)).collect()
+        assert row["count"] == 0.0 and row["q50"] is None
+    assert sorted(
+        (r["probe"], r["est_freq"]) for r in cms_frequencies(df, "s", ["a", "b"]).collect()
+    ) == [("a", 0.0), ("b", 0.0)]
+    assert hll_distinct(df.limit(0), "s").collect() == []
+    assert cms_frequencies(df.limit(0), "s", ["a"]).collect() == []
+
+
+def test_profile_table_all_null_string_column(spark):
+    from ddsparkle.spark.dataops import profile_table
+
+    df = spark.createDataFrame([(None, 1.0), (None, 2.0), (None, 3.0)], "s string, v double")
+    row = {r["column"]: r for r in profile_table(df, columns=["s"]).collect()}["s"]
+    assert (row["n_null"], row["n_distinct"], row["distinct_within_3rse"]) == (3, 0, True)
+
+
+def _scalar_fold(payloads, from_payload):
+    acc = from_payload(payloads[0])
+    for b in payloads[1:]:
+        acc.merge(from_payload(b))
+    return acc.to_bytes()
+
+
+@pytest.mark.parametrize("kind", ["hll", "cms", "kmv"])
+def test_fold_payloads_matches_scalar_fold(spark, kind):
+    """_fold_payloads without finalize equals a scalar from_payload/merge
+    fold over each key's partials, byte for byte, across Arrow batch
+    boundaries, a NULL key part, a two-column key, and single- and
+    many-partial keys; a single partial comes back unparsed."""
+    from ddsparkle.sketches import CountMinSketch, HyperLogLog
+    from ddsparkle.sketches.kmv import KMVSketch
+    from ddsparkle.spark.approx import _fold_payloads
+
+    make, from_payload = {
+        "hll": (lambda: HyperLogLog(p=11), lambda b: HyperLogLog.from_bytes(b, 11, 0)),
+        "cms": (
+            lambda: CountMinSketch(depth=3, width=64),
+            lambda b: CountMinSketch.from_bytes(b, 3, 64, 0),
+        ),
+        "kmv": (lambda: KMVSketch(k=16), lambda b: KMVSketch.from_bytes(b, seed=0)),
+    }[kind]
+    keys = [("a", 1), ("a", 2), ("b", 1), (None, 1), ("a", None), ("c", 3)]
+    n_partials = {("a", 1): 9, ("a", 2): 1, ("b", 1): 4, (None, 1): 3, ("a", None): 2, ("c", 3): 1}
+    rows = []
+    for ki, key in enumerate(keys):
+        for i in range(n_partials[key]):
+            sk = make()
+            sk.update(pd.Series([f"v{ki}-{j}" for j in range(i * 5, i * 5 + 40)]))
+            rows.append((*key, sk.to_bytes()))
+    partials = spark.createDataFrame(rows, "k string, j long, payload binary").repartition(5)
+    want = {}
+    for k, j, b in rows:
+        want.setdefault((k, j), []).append(b)
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        got = _fold_payloads(partials, ["k", "j"], from_payload).collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    got = {(r["k"], r["j"]): bytes(r["payload"]) for r in got}
+    assert set(got) == set(want)
+    for key, payloads in want.items():
+        expect = payloads[0] if len(payloads) == 1 else _scalar_fold(payloads, from_payload)
+        assert got[key] == expect, key
+
+
+def test_reduce_payloads_tree_matches_driver_fold(spark, monkeypatch):
+    """Above _FAN_IN partitions _reduce_payloads first folds the per-task
+    payloads by partition id; with the fan-in at 2, a 9-partition input
+    takes that path and the merged sketch equals the direct driver fold
+    byte for byte."""
+    from pyspark.sql import functions as F
+
+    from ddsparkle.sketches.ams import AMSSketch
+    from ddsparkle.spark import approx
+
+    df = spark.range(5000).select(((F.col("id") * 7919) % 1013).alias("v")).repartition(9)
+    cases = [
+        (
+            lambda: HyperLogLog(p=11),
+            lambda sk, v: sk.update(v),
+            lambda b: HyperLogLog.from_bytes(b, 11, 0),
+        ),
+        (
+            lambda: AMSSketch(n_counters=64),
+            lambda sk, v: sk.update(v.to_numpy(np.int64)),
+            AMSSketch.from_bytes,
+        ),
+    ]
+    for make, update, from_payload in cases:
+        partials = approx._build_payload_partials(df, "v", [], make, update)
+        assert partials.rdd.getNumPartitions() == 9
+        payloads = [bytes(r["payload"]) for r in partials.collect()]
+        want = _scalar_fold(payloads, from_payload)
+        assert approx._reduce_payloads(partials, from_payload).to_bytes() == want
+        with monkeypatch.context() as m:
+            folds = []
+            fold = approx._fold_payloads
+
+            def spy(partials, key_cols, *args):
+                folds.append(key_cols)
+                return fold(partials, key_cols, *args)
+
+            m.setattr(approx, "_fold_payloads", spy)
+            m.setattr(approx, "_FAN_IN", 2)
+            got = approx._reduce_payloads(partials, from_payload)
+        assert folds == [["__s"]]
+        assert got.to_bytes() == want

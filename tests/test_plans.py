@@ -165,6 +165,39 @@ def test_stored_sketch_finalize_plan_shape(spark, sf_dir, tmp_path):
         assert_one_finalize_over_one_exchange(plan_of(res))
 
 
+def test_payload_fold_plan_shape(spark, sf_dir, tmp_path):
+    """Every payload-sketch merge is one repartition by key plus one
+    MapInPandas (approx._fold_payloads): no grouped-map Python operator, no
+    sort, and the fold sits directly above the plan's only Exchange."""
+    import re
+
+    from ddsparkle.sketches import HyperLogLog
+    from ddsparkle.spark.approx import cms_frequencies, hll_distinct, kll_quantiles
+    from ddsparkle.spark.rollup import (
+        compact_payload_rollup,
+        hll_rollup,
+        read_rollup,
+        rollup_distinct,
+        write_rollup,
+    )
+
+    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    write_rollup(hll_rollup(df, "user_id", by="event_type", p=12), str(tmp_path / "roll"))
+    roll = read_rollup(spark, str(tmp_path / "roll"))
+    for res in (
+        hll_distinct(df, "user_id", by="event_type"),
+        kll_quantiles(df, "value"),
+        cms_frequencies(df, "event_type", ["click"]),
+        rollup_distinct(roll, by="event_type", p=12),
+        compact_payload_rollup(roll, lambda b: HyperLogLog.from_bytes(b, 12, 0)),
+    ):
+        plan = plan_of(res)
+        tree = plan.split("\n\n")[0]
+        assert "FlatMapGroupsInPandas" not in plan and "Sort" not in plan, plan
+        assert tree.count("Exchange") == 1, plan
+        assert re.search(r"\+- MapInPandas \(\d+\)\n\s*\+- Exchange \(", tree), plan
+
+
 def test_length_projection_stays_jvm_side(spark, sf_dir):
     """length(text) must be computed by Catalyst (in the Project above the
     scan), not inside Python — the Arrow channel carries only the int.

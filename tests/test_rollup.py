@@ -342,6 +342,21 @@ def test_payload_rollup_small_input_one_row_per_cell(spark):
     assert set(cells) == {(r["bucket_ts"], r["k"]) for r in want.collect()}
 
 
+def test_rollup_distinct_sliding_one_row_per_bucket_with_dims(events):
+    """A rollup with dimensions stores several cells per bucket; the
+    sliding distinct folds them per bucket first, so it returns one row
+    per bucket and the same answer as the rollup without dimensions."""
+    from ddsparkle.spark.rollup import hll_rollup, rollup_distinct_sliding
+
+    def sliding(by):
+        roll = hll_rollup(events, "user_id", granularity="day", by=by, p=12, seed=0)
+        return _pdf(rollup_distinct_sliding(roll, window_buckets=7, p=12, seed=0))
+
+    flat, by_type = sliding(None), sliding("event_type")
+    assert by_type["bucket_ts"].is_unique
+    assert by_type.equals(flat), (by_type, flat)
+
+
 def test_cms_rollup_window_frequencies(events, spark):
     """CMS cell union is counter-wise addition: the windowed frequency
     answer from hourly cells must equal exact windowed counts at a
