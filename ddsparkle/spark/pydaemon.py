@@ -20,6 +20,15 @@ those objects in the permanent generation, so it walks only what was made
 since the fork (~720 objects in a small ``mapInPandas`` task), and no worker
 imports pyspark's SQL and Arrow modules on its first task.
 
+A reused worker waits for its next task inside ``pyspark.worker.main``. When
+the JVM closes that idle worker's socket (after a minute idle, and for every
+idle worker at ``spark.stop()``), ``main`` reads end-of-stream, writes an
+error record to the closed socket and the daemon's final ``flush()`` raises
+``BrokenPipeError``, which prints a traceback that reads like a failed task.
+Here a worker first peeks at its socket (the bytes stay buffered for
+``main``) and exits quietly when it is already closed; a task that starts,
+and any error inside it, runs exactly as before.
+
 ``python -m`` imports the parent packages first, so ``ddsparkle`` and
 ``ddsparkle.spark`` must never import pyspark at import time.
 """
@@ -51,6 +60,18 @@ def drop_spark_archives() -> None:
             del sys.path_importer_cache[key]
 
 
+def exit_if_closed(worker_main):
+    """Wrap pyspark's worker entry so a worker whose socket is closed before
+    a task starts exits without writing to it."""
+
+    def main(infile, outfile):
+        if not infile.peek(1):
+            os._exit(0)
+        return worker_main(infile, outfile)
+
+    return main
+
+
 if __name__ == "__main__":
     drop_spark_archives()
     import gc
@@ -62,6 +83,7 @@ if __name__ == "__main__":
 
     import ddsparkle.spark.agg  # noqa: F401
 
+    daemon.worker_main = exit_if_closed(daemon.worker_main)
     gc.collect()
     gc.freeze()
     daemon.manager()

@@ -6,6 +6,7 @@ cores."""
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import zipfile
@@ -152,3 +153,96 @@ print(json.dumps({{"dir": d, "mode": stat.S_IMODE(os.stat(d).st_mode), "rows": n
     assert got["mode"] == 0o700
     assert len(got["dir"]) + len("/.00000000-0000-0000-0000-000000000000.sock") <= 107
     assert not os.path.exists(got["dir"])
+
+
+def test_idle_worker_exits_quietly_when_its_socket_closes():
+    """A worker whose socket the JVM closes before a task starts (every idle
+    reused worker at ``spark.stop()``) exits without writing to it: no
+    ``BrokenPipeError`` traceback on the daemon's stderr. The daemon is
+    driven the way the JVM drives it, over a Unix socket, with no JVM."""
+    import socket
+    import struct
+    import tempfile
+    import time
+
+    sock_dir = tempfile.mkdtemp(prefix="ddsp-test-", dir="/tmp")
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p),
+        "PYTHON_UNIX_DOMAIN_ENABLED": "true",
+        "PYTHON_WORKER_FACTORY_SOCK_DIR": sock_dir,
+        "SPARK_REUSE_WORKER": "1",
+        "PYTHON_DAEMON_KILL_WORKER_ON_FLUSH_FAILURE": "true",
+    }
+    daemon = subprocess.Popen(
+        [sys.executable, "-m", "ddsparkle.spark.pydaemon"], cwd=ROOT, env=env,
+        stdin=subprocess.PIPE, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+    )
+    try:
+        (n,) = struct.unpack("!i", daemon.stdout.read(4))
+        path = daemon.stdout.read(n).decode()
+        with socket.socket(socket.AF_UNIX, socket.SOCK_STREAM) as s:
+            s.connect(path)
+            (pid,) = struct.unpack("!i", s.recv(4, socket.MSG_WAITALL))
+        deadline = time.monotonic() + 30
+        while time.monotonic() < deadline:
+            try:
+                os.kill(pid, 0)
+            except ProcessLookupError:
+                break
+            time.sleep(0.05)
+        else:
+            pytest.fail(f"worker {pid} still running after its socket closed")
+        # communicate() closes stdin, the JVM's stop: the daemon then exits
+        _, err = daemon.communicate(timeout=30)
+    finally:
+        if daemon.poll() is None:
+            daemon.kill()
+            daemon.communicate()
+        shutil.rmtree(sock_dir, ignore_errors=True)
+    assert b"BrokenPipeError" not in err, err.decode(errors="replace")
+    assert b"Traceback" not in err, err.decode(errors="replace")
+
+
+def test_spark_stop_prints_no_broken_pipe_and_udf_errors_still_fail():
+    """Kernel quantiles leave idle reused workers behind. The JVM closes the
+    socket of a worker idle for over a minute (its reaper checks every 10 s)
+    and of every idle worker at ``spark.stop()``; neither may print a
+    traceback. A UDF that raises still fails its query with the Python
+    error."""
+    code = """
+import json
+import time
+from ddsparkle.spark.agg import quantiles
+from ddsparkle.spark.session import get_spark
+
+spark = get_spark(master="local[4]", shuffle_partitions=8, extra_conf={
+    "spark.ui.enabled": "false", "spark.driver.memory": "1g"})
+spark.sparkContext.setLogLevel("ERROR")
+df = spark.range(20000).selectExpr("id % 7 AS k", "CAST(id AS DOUBLE) + 1.0 AS v").repartition(8)
+for _ in range(3):
+    quantiles(df, "v", by="k", qs=[0.5], mode="kernel").collect()
+    quantiles(df, "v", qs=[0.5], mode="kernel").collect()
+time.sleep(75)  # the JVM reaps the idle workers: no race with spark.stop()
+
+def boom(batches):
+    for _ in batches:
+        raise ValueError("udf-raised-on-purpose")
+    yield from ()
+
+try:
+    spark.range(8, numPartitions=2).mapInPandas(boom, "id long").collect()
+    error = None
+except Exception as exc:
+    error = f"{type(exc).__name__}: {exc}"
+spark.stop()
+print(json.dumps({"error": error}))
+"""
+    p = subprocess.run(
+        [sys.executable, "-c", code], cwd=ROOT, check=True,
+        capture_output=True, text=True, timeout=600,
+    )
+    error = json.loads(p.stdout.strip().splitlines()[-1])["error"]
+    assert error is not None and "udf-raised-on-purpose" in error
+    assert "ValueError" in error
+    assert "BrokenPipeError" not in p.stderr, p.stderr[-3000:]
