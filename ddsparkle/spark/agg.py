@@ -16,6 +16,12 @@ one row per key, the global tree level and the finalize) runs one kernel,
 stream. ``serde.merge_rows`` and ``DDSketch.merge`` remain the scalar
 reference it is tested against.
 
+Every kernel sketch query finalizes in the same stage-2 pass (``_finalize``):
+the merged buckets of all keys of a partition are laid out once in rank-walk
+order (``_Walk``), and one of three walks reads them — quantiles, CDF at
+probe values, or trimmed and winsorized means. A keyless finalize runs in
+one partition.
+
 For global aggregations ``quantiles`` runs stage 2 on the driver instead,
 over the collected partial rows; an intermediate tree stage bounds how many
 rows it folds. All per-row work (value derivation, filters) should be done with
@@ -32,7 +38,7 @@ import numpy as np
 import pandas as pd
 
 from ..config import SketchConfig
-from ..serde import SKETCH_ROW_FIELDS, merge_rows, row_to_sketch, spark_sketch_schema
+from ..serde import SKETCH_ROW_FIELDS, merge_rows, spark_sketch_schema
 from ..store import _group_sum
 
 __all__ = [
@@ -328,26 +334,25 @@ def merge_partials_to_sketch_rows(partials, key_cols: Sequence[str] = ()):
     in one vectorized pass, so there is no per-group Python apply and no
     per-key sketch object. Returns ``[*key_cols, *SKETCH_ROW_FIELDS]``."""
     key_cols = list(key_cols)
-    src = partials.select(*key_cols, *SKETCH_ROW_FIELDS)
-    parted = src.repartition(*[src[c] for c in key_cols]) if key_cols else src.repartition(1)
-    return merge_partials_within_partitions(parted, key_cols)
+    return merge_partials_within_partitions(_by_key(partials, key_cols), key_cols)
 
 
-def _lit0():
-    from pyspark.sql import functions as F
+def _by_key(src, key_cols: Sequence[str]):
+    """The key columns and sketch fields of ``src``, repartitioned by the
+    keys (to one partition when there are none)."""
+    src = src.select(*key_cols, *SKETCH_ROW_FIELDS)
+    return src.repartition(*[src[c] for c in key_cols]) if key_cols else src.repartition(1)
 
-    return F.lit(0)
+
+# the columns a quantile finalize appends after the quantiles
+_STAT_COLS = ["count", "sum", "min", "max", "avg"]
 
 
-def _finalize_schema(src, key_cols: Sequence[str], q_names: Sequence[str]):
+def _finalize_schema(src, key_cols: Sequence[str], cols: Sequence[str]):
     from pyspark.sql import types as T
 
     key_fields = [src.schema[c] for c in key_cols]
-    stat_fields = [
-        T.StructField(name, T.DoubleType())
-        for name in list(q_names) + ["count", "sum", "min", "max", "avg"]
-    ]
-    return T.StructType(key_fields + stat_fields)
+    return T.StructType(key_fields + [T.StructField(c, T.DoubleType()) for c in cols])
 
 
 # Above this many stage-1 partitions, a global kernel aggregation first folds
@@ -439,7 +444,7 @@ def quantiles(
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    schema = _finalize_schema(partials, [], q_names)
+    schema = _finalize_schema(partials, [], [*q_names, *_STAT_COLS])
     rows = partials.collect()
     out = [finalize_row(merge_rows(rows), {}, qs, q_names)] if rows else []
     table = pa.Table.from_pylist(out, schema=to_arrow_schema(schema))
@@ -471,32 +476,35 @@ def finalize_row(sk, key_values: dict, qs: Sequence[float], q_names: Sequence[st
 
 
 def finalize_sketch_rows(src, group_keys: Sequence[str], qs: Sequence[float], q_names: Sequence[str]):
-    """Merge + finalize sketch rows per ``group_keys`` (all rows when empty):
-    repartition by the keys, then ONE ``mapInPandas`` pass in which every
-    group of a partition merges and rank-walks at once (segmented cumsum +
-    global searchsorted), so per-group Python cost is ~zero. Returns
-    ``[*group_keys, *q_names, count, sum, min, max, avg]``."""
-    group_keys = list(group_keys)
-    if not group_keys:
-        src = src.withColumn("__g", _lit0())
-        return finalize_sketch_rows(src, ["__g"], qs, q_names).drop("__g")
+    """Merge + quantile-finalize sketch rows (partials, merged rows or
+    rollup cells) per ``group_keys``, all rows when empty: the shared
+    ``_finalize`` pass with the quantile walk. Returns ``[*group_keys,
+    *q_names, count, sum, min, max, avg]``."""
     qs = [float(q) for q in qs]
     q_names = list(q_names)
-    src = src.select(*group_keys, *SKETCH_ROW_FIELDS)
-    schema = _finalize_schema(src, group_keys, q_names)
-    out_cols = group_keys + q_names + ["count", "sum", "min", "max", "avg"]
+    return _finalize(
+        src, group_keys, [*q_names, *_STAT_COLS], lambda w: _quantile_walk(w, qs, q_names)
+    )
+
+
+def _finalize(src, group_keys: Sequence[str], cols: Sequence[str], walk):
+    """The one kernel finalize: repartition sketch rows by ``group_keys``
+    (to one partition when there are none), then ONE ``mapInPandas`` in
+    which every key of a partition merges and is laid out in walk order
+    (``_Walk``) at once, and ``walk`` reads every key's answer off those
+    arrays — so per-key Python cost is ~zero. ``walk`` maps a ``_Walk`` to
+    one array per output column; returns ``[*group_keys, *cols]``."""
+    group_keys = list(group_keys)
+    cols = list(cols)
+    parted = _by_key(src, group_keys)
 
     def finalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            yield pd.DataFrame({c: pd.Series([], dtype=object) for c in out_cols})
-            return
-        yield _vectorized_grouped_finalize(
-            pd.concat(pdfs, ignore_index=True), group_keys, qs, q_names, out_cols
-        )
+        if pdfs:
+            w = _Walk(pd.concat(pdfs, ignore_index=True), group_keys)
+            yield w.keys.assign(**walk(w))[group_keys + cols]
 
-    parted = src.repartition(*[src[c] for c in group_keys])
-    return parted.mapInPandas(finalize, schema=schema)
+    return parted.mapInPandas(finalize, schema=_finalize_schema(parted, group_keys, cols))
 
 
 def merge_partials_within_partitions(partials, key_cols: Sequence[str]):
@@ -514,111 +522,131 @@ def merge_partials_within_partitions(partials, key_cols: Sequence[str]):
     return partials.mapInPandas(fold, schema=_partial_schema(partials, key_cols))
 
 
-def _vectorized_grouped_finalize(pdf, key_cols, qs, q_names, out_cols):
-    """Merge + quantile-finalize EVERY group of a partition in one vectorized
-    pass: ``_merge_sketch_frame``, then one rank walk over the merged
-    buckets of all groups.
-
-    Walk order per group is (negative store by descending index, zero
-    bucket, positive store by ascending index) — a packed sort key
-    (key_id, part, ord) where ord = -index for the negative part. The rank
-    walk 'first bucket whose cumulative exceeds q*(n-1)' becomes one global
-    np.searchsorted over the partition-wide cumulative-count array with
-    per-group base offsets. Matches DDSketch.java:353-388 semantics exactly
-    (verified against the scalar path in tests).
+class _Walk:
+    """Every key of a sketch-row frame merged (``_merge_sketch_frame``) and
+    laid out for the rank walk: one partition-wide array per bucket field,
+    each key's buckets contiguous in walk order — negative store by
+    descending index, zero bucket, positive store by ascending index, i.e.
+    ascending values (``DDSketch._walk_arrays``). Per key: ``base`` (the
+    cumulative count before its first bucket), ``totals`` (its bucket
+    count), ``count`` (the exact count when tracked, else ``totals``) and
+    the index range ``first``..``last`` of its buckets. A key with no
+    bucket mass has ``totals`` 0; every walk gives it NaN (NULL) answers.
     """
-    from ..mapping import mapping_from_kind
 
-    keys, ident, kid, part, idx, counts, stats = _merge_sketch_frame(pdf, key_cols)
-    mapping = mapping_from_kind(
-        ident["mapping_kind"], float(ident["gamma"]), float(ident["index_offset"])
-    )
-    n_keys = len(keys)
-    out = {}
-    if not kid.size:
-        for n in q_names:
-            out[n] = np.full(n_keys, math.nan)
-        out.update(
-            count=np.zeros(n_keys), sum=np.full(n_keys, math.nan),
-            min=np.full(n_keys, math.nan), max=np.full(n_keys, math.nan),
-            avg=np.full(n_keys, math.nan),
+    def __init__(self, pdf, key_cols):
+        from ..mapping import mapping_from_kind
+
+        self.keys, ident, kid, part, idx, counts, self.stats = _merge_sketch_frame(pdf, key_cols)
+        self.has_exact = bool(ident["has_exact"])
+        mapping = mapping_from_kind(
+            ident["mapping_kind"], float(ident["gamma"]), float(ident["index_offset"])
         )
-        return keys.assign(**out)[out_cols]
+        # _merge_buckets sorts every store by ascending index; the walk reads
+        # the negative one descending
+        order = np.argsort(_pack(kid, part, np.where(part == 0, -idx, idx)), kind="stable")
+        kid, part, idx, counts = kid[order], part[order], idx[order], counts[order]
+        values = np.zeros(kid.size)
+        for p, sign in ((0, -1.0), (2, 1.0)):
+            rows = part == p
+            if rows.any():
+                values[rows] = sign * np.asarray(mapping.value(idx[rows]), np.float64)
+        self.kid, self.values, self.counts = kid, values, counts
 
-    # _merge_buckets sorts every store by ascending index; the walk reads
-    # the negative one descending
-    order = np.argsort(_pack(kid, part, np.where(part == 0, -idx, idx)), kind="stable")
-    kid, part, idx, counts = kid[order], part[order], idx[order], counts[order]
-    values = np.zeros(kid.size)
-    neg_rows = part == 0
-    pos_rows = part == 2
-    if neg_rows.any():
-        values[neg_rows] = -np.asarray(mapping.value(idx[neg_rows]), np.float64)
-    if pos_rows.any():
-        values[pos_rows] = np.asarray(mapping.value(idx[pos_rows]), np.float64)
+        # one segment per key that has buckets; keys without any are absent
+        n_keys = len(self.keys)
+        self.seg_starts = np.flatnonzero(np.diff(kid, prepend=-1))
+        self.seg_kids = kid[self.seg_starts]
+        self.seg_ends = np.append(self.seg_starts, kid.size)[1:] - 1
+        self.cum = np.cumsum(counts)
+        seg_base = np.where(self.seg_starts > 0, self.cum[self.seg_starts - 1], 0.0)
+        self.base, self.totals = np.zeros(n_keys), np.zeros(n_keys)
+        self.first, self.last = np.zeros(n_keys, np.int64), np.zeros(n_keys, np.int64)
+        self.base[self.seg_kids] = seg_base
+        self.totals[self.seg_kids] = self.cum[self.seg_ends] - seg_base
+        self.first[self.seg_kids] = self.seg_starts
+        self.last[self.seg_kids] = self.seg_ends
+        self.count = self.stats[0] if self.has_exact else self.totals
 
-    # segment layout per key (kid contiguous ascending, but keys with no
-    # buckets are absent — map segments back to kid)
-    seg_change = np.nonzero(np.diff(kid))[0] + 1
-    seg_starts = np.concatenate([[0], seg_change])
-    seg_kids = kid[seg_starts]
-    cum = np.cumsum(counts)
-    base = np.zeros(n_keys)
-    seg_base = np.where(seg_starts > 0, cum[seg_starts - 1], 0.0)
-    base[seg_kids] = seg_base
-    seg_ends_idx = np.concatenate([seg_change, [kid.size]]) - 1
-    totals = np.zeros(n_keys)
-    totals[seg_kids] = cum[seg_ends_idx] - seg_base
-    seg_start_of = np.zeros(n_keys, np.int64)
-    seg_start_of[seg_kids] = seg_starts
-    seg_end_of = np.zeros(n_keys, np.int64)
-    seg_end_of[seg_kids] = seg_ends_idx
+    def at_ranks(self, ranks):
+        """(n_keys, R) values at per-key ``ranks``: the first bucket of the
+        key whose cumulative count exceeds the rank (``DDSketch.java:353-388``),
+        one global ``searchsorted`` over the partition-wide cumulative
+        counts, offset by each key's ``base``."""
+        if not self.values.size:
+            return np.full(ranks.shape, math.nan)
+        targets = self.base.reshape(-1, 1) + ranks
+        pos = np.searchsorted(self.cum, targets.ravel(), side="right").reshape(ranks.shape)
+        pos = np.clip(pos, self.first.reshape(-1, 1), self.last.reshape(-1, 1))
+        return self.values[pos]
 
-    # ranks: (n_keys, Q); global targets = base + q*(n-1)
+
+def _quantile_walk(w, qs, q_names):
+    """Quantiles at ``qs`` plus count, sum, min, max and avg per key, like
+    ``finalize_row``: exact stats (and quantiles clamped into the exact
+    [min, max]) when tracked, bucket estimates otherwise."""
+    n_keys = len(w.totals)
     qs_arr = np.asarray(qs, np.float64)
-    ranks = qs_arr.reshape(1, -1) * (totals.reshape(-1, 1) - 1.0)
-    targets = base.reshape(-1, 1) + ranks
-    pos_idx = np.searchsorted(cum, targets.ravel(), side="right").reshape(n_keys, -1)
-    pos_idx = np.clip(
-        pos_idx, seg_start_of.reshape(-1, 1), seg_end_of.reshape(-1, 1)
-    )
-    qvals = values[pos_idx]  # (n_keys, Q)
-    empty = totals <= 0
-    if empty.any():
-        qvals[empty, :] = math.nan
-
-    if ident["has_exact"]:
-        st_count, st_sum, _, st_min, st_max = stats
-        qvals = np.clip(qvals, st_min.reshape(-1, 1), st_max.reshape(-1, 1))
+    qvals = w.at_ranks(qs_arr.reshape(1, -1) * (w.totals.reshape(-1, 1) - 1.0))
+    qvals[w.totals <= 0, :] = math.nan
+    if w.has_exact:
+        count, total, _, lo, hi = w.stats
+        qvals = np.clip(qvals, lo.reshape(-1, 1), hi.reshape(-1, 1))
         # empty groups (all-null values): count 0, NaN stats like SQL aggs
-        none = st_count <= 0
-        if none.any():
-            st_sum[none] = math.nan
-            st_min[none] = math.nan
-            st_max[none] = math.nan
-        count_out, sum_out, min_out, max_out = st_count, st_sum, st_min, st_max
+        none = count <= 0
+        total[none] = lo[none] = hi[none] = math.nan
     else:
-        count_out = totals
+        count = w.totals
         # bucket-approx sum/min/max, vectorized per key
-        sum_out = np.zeros(n_keys)
-        np.add.at(sum_out, kid, values * counts)
-        min_out = np.full(n_keys, math.nan)
-        max_out = np.full(n_keys, math.nan)
-        min_out[seg_kids] = values[seg_starts]
-        max_out[seg_kids] = values[seg_ends_idx]
-        sum_out[totals <= 0] = math.nan  # empty groups: NaN like finalize_row
-
-    for j, name in enumerate(q_names):
-        out[name] = qvals[:, j]
+        total = np.zeros(n_keys)
+        np.add.at(total, w.kid, w.values * w.counts)
+        total[count <= 0] = math.nan  # empty groups: NaN like finalize_row
+        lo, hi = np.full(n_keys, math.nan), np.full(n_keys, math.nan)
+        lo[w.seg_kids] = w.values[w.seg_starts]
+        hi[w.seg_kids] = w.values[w.seg_ends]
+    out = dict(zip(q_names, qvals.T))
     with np.errstate(invalid="ignore", divide="ignore"):
-        out.update(
-            count=count_out,
-            sum=sum_out,
-            min=min_out,
-            max=max_out,
-            avg=sum_out / count_out,
-        )
-    return keys.assign(**out)[out_cols]
+        out.update(count=count, sum=total, min=lo, max=hi, avg=total / count)
+    return out
+
+
+def _cdf_walk(w, xs, x_names):
+    """``DDSketch.cdf_at_values`` per key: the mass at or below each probe
+    (a weighted ``np.bincount`` over the walk-ordered buckets, so each
+    key's sum folds left to right like the scalar cumsum) over the bucket
+    total, plus ``count``. Count-0 keys get NaN (NULL) estimates."""
+    out = {}
+    with np.errstate(invalid="ignore", divide="ignore"):
+        for x, name in zip(xs, x_names):
+            below = w.values <= x
+            mass = np.bincount(w.kid[below], w.counts[below], minlength=len(w.totals))
+            out[name] = np.where(w.count > 0, mass / w.totals, math.nan)
+    out["count"] = w.count
+    return out
+
+
+def _trimmed_walk(w, lo, hi):
+    """``DDSketch.trimmed_means`` per key: each bucket keeps its count
+    clipped to the rank window ``[k_lo, n - k_hi)`` of the key's segment
+    cumsum, the trimmed sum folds ``kept * value`` left to right (a
+    weighted ``np.bincount``), and the winsorized mean re-adds the cut
+    tails at the boundary-rank values from ``_Walk.at_ranks``. Exact stats
+    clamp both means into [min, max]; count-0 keys get NaN (NULL) means."""
+    n = w.totals
+    k_lo, k_hi = np.floor(lo * n), np.floor(hi * n)
+    cum = w.cum - w.base[w.kid]
+    kept = np.maximum(
+        np.minimum(cum, (n - k_hi)[w.kid]) - np.maximum(cum - w.counts, k_lo[w.kid]), 0.0
+    )
+    t = np.bincount(w.kid, kept * w.values, minlength=n.size)
+    v_lo, v_hi = w.at_ranks(np.stack([k_lo, n - k_hi - 1.0], axis=1)).T
+    with np.errstate(invalid="ignore", divide="ignore"):
+        means = [t / (n - k_lo - k_hi), ((k_lo * v_lo + t) + k_hi * v_hi) / n]
+    if w.has_exact:
+        means = [np.clip(m, w.stats[3], w.stats[4]) for m in means]
+    live = w.count > 0
+    trimmed, winsorized = (np.where(live, m, math.nan) for m in means)
+    return {"trimmed_mean": trimmed, "winsorized_mean": winsorized, "count": w.count}
 
 
 def _clamp_per_group(kid, idx, policy, max_bins):
@@ -693,9 +721,11 @@ def quantiles_grouping_sets(
 
     Returns [*by (NULL where the set omits a key), gset, *q_names, count];
     ``gset`` labels the set ("event_type,day", "event_type", "total").
+    Each set is one ``finalize_sketch_rows`` over the finest rows (it
+    repartitions by the set's keys and merges), so the plan holds one
+    exchange per set.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     config = config or SketchConfig()
     by = list(by)
@@ -714,9 +744,7 @@ def quantiles_grouping_sets(
 
     outs = []
     for s in sets:
-        rows = finest.select(*s, *SKETCH_ROW_FIELDS)
-        merged = merge_partials_to_sketch_rows(rows, s) if len(s) < len(by) else rows
-        fin = finalize_sketch_rows(merged, s, qs, q_names)
+        fin = finalize_sketch_rows(finest, s, qs, q_names)
         label = ",".join(s) if s else "total"
         cols = [
             (F.col(c) if c in s else F.lit(None).cast(key_types[c])).alias(c)
@@ -742,6 +770,19 @@ def cdf_column_name(x: float) -> str:
     return f"cdf_{s}"
 
 
+def _cdf_probes(xs, x_names=None):
+    """The probes as floats and their column names (``cdf_column_name``
+    by default) — the one probe check of every CDF path, kernel, SQL and
+    rollup: a NaN probe and a repeated column name raise."""
+    xs = [float(x) for x in xs]
+    if any(math.isnan(x) for x in xs):
+        raise ValueError("NaN is not a valid CDF probe")
+    x_names = [cdf_column_name(x) for x in xs] if x_names is None else list(x_names)
+    if len(set(x_names)) != len(x_names):
+        raise ValueError(f"duplicate cdf column names: {x_names}")
+    return xs, x_names
+
+
 def cdf_at_values(
     df,
     value_col: str,
@@ -763,22 +804,19 @@ def cdf_at_values(
     exact stats) runs the whole thing as a pure-Catalyst plan — one scan,
     two hash aggregates, no Python (``ddsketch_cdf_spark_sql``); 'kernel'
     is the Arrow-vectorized partial-sketch path (required for interpolated
-    mappings).
+    mappings): partial sketches per task, then the quantile path's finalize
+    pass (one exchange, one ``mapInPandas``) reading every key's CDF off
+    the merged bucket arrays (``_cdf_walk``).
 
-    Returns [*by, *x_names, count]. CDF estimates are in [0, 1] with the
-    mapping's relative-accuracy contract on the VALUE axis (the estimate is
-    the exact CDF evaluated within relative distance ~2*alpha of x).
+    Returns [*by, *x_names, count]; a count-0 group's cdf columns are NULL.
+    CDF estimates are in [0, 1] with the mapping's relative-accuracy
+    contract on the VALUE axis (the estimate is the exact CDF evaluated
+    within relative distance ~2*alpha of x). A NaN probe raises
+    ``ValueError`` in every mode.
     """
-    from pyspark.sql import types as T
-
     config = config or SketchConfig()
     key_cols = [by] if isinstance(by, str) else list(by or [])
-    xs = [float(x) for x in xs]
-    if x_names is None:
-        x_names = [cdf_column_name(x) for x in xs]
-    x_names = list(x_names)
-    if len(set(x_names)) != len(x_names):
-        raise ValueError(f"duplicate cdf column names: {x_names}")  # sql mode; kernel re-checks
+    xs, x_names = _cdf_probes(xs, x_names)
     if mode not in ("auto", "kernel", "sql"):
         raise ValueError(f"unknown mode {mode!r}; one of auto|kernel|sql")
     if mode == "auto":
@@ -797,11 +835,7 @@ def cdf_at_values(
         return df.sparkSession.sql(sql, __ddsparkle_src__=df)
 
     partials = build_partial_sketches(df, value_col, key_cols, config, weight_col)
-    # one merged sketch row per group through the vectorized merge pass,
-    # then a single mapInPandas finalize over the merged rows — no
-    # per-group Python apply anywhere
-    merged = merge_partials_to_sketch_rows(partials, key_cols)
-    return cdf_finalize_sketch_rows(merged, key_cols, xs, x_names)
+    return _finalize(partials, key_cols, [*x_names, "count"], lambda w: _cdf_walk(w, xs, x_names))
 
 
 def percentile_rank_scores(
@@ -851,6 +885,8 @@ def percentile_rank_scores(
     searchsorted), so scores hash-match at round-4.
     """
     from pyspark.sql import types as T
+
+    from ..serde import row_to_sketch
 
     config = config or SketchConfig()
     key_cols = [by] if isinstance(by, str) else list(by or [])
@@ -907,51 +943,6 @@ def percentile_rank_scores(
 _MISSING = object()
 
 
-def cdf_finalize_sketch_rows(merged, key_cols, xs, x_names=None):
-    """CDF finalize over pre-merged sketch rows (one row per key): one
-    mapInPandas pass emitting [*key_cols, *x_names, count]. Shared by
-    ``cdf_at_values``' kernel mode and ``rollup.rollup_cdf`` (persisted
-    cells answering windowed SLO-attainment queries)."""
-    from pyspark.sql import types as T
-
-    key_cols = list(key_cols)
-    xs = [float(x) for x in xs]
-    if x_names is None:
-        x_names = [cdf_column_name(x) for x in xs]
-    x_names = list(x_names)
-    if len(set(x_names)) != len(x_names):
-        raise ValueError(f"duplicate cdf column names: {x_names}")
-    key_fields = [merged.schema[c] for c in key_cols]
-    schema = T.StructType(
-        key_fields
-        + [T.StructField(n, T.DoubleType()) for n in x_names]
-        + [T.StructField("count", T.DoubleType())]
-    )
-    out_cols = key_cols + x_names + ["count"]
-
-    def fin(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for i in range(len(pdf)):
-                sk = row_to_sketch(pdf[SKETCH_ROW_FIELDS].iloc[i])
-                row = {c: pdf[c].iloc[i] for c in key_cols}
-                if sk.count > 0:
-                    row.update(
-                        {n: float(v) for n, v in zip(x_names, sk.cdf_at_values(xs))}
-                    )
-                else:
-                    # count-0 groups (all-NULL values) survive with NULL cdf
-                    # columns, matching mode='sql' — not a LookupError crash
-                    row.update({n: None for n in x_names})
-                row["count"] = float(sk.count)
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    return merged.mapInPandas(fin, schema=schema)
-
-
 def ddsketch_trimmed_spark_sql(
     source: str,
     value_col: str,
@@ -968,7 +959,8 @@ def ddsketch_trimmed_spark_sql(
     ``aggregate(array_sort(collect_list(struct(part, ord, kept*val))),
     0.0D, (acc, x) -> acc + x.t)`` — over the ascending-value bucket walk,
     starting from 0.0: the identical IEEE expression tree the kernel's
-    Python loop and the DuckDB twin's ``list_reduce`` evaluate, so all
+    left-to-right ``np.bincount`` fold and the DuckDB twin's
+    ``list_reduce`` evaluate, so all
     three paths agree at round-4. The HOF evaluates interpretively, but
     only over per-group BUCKET arrays (~hundreds of elements at
     alpha=0.01), never per input row — the packing-fold cost class, not
@@ -1064,12 +1056,14 @@ def trimmed_means(
     DDSketch's bucket walk (``DDSketch.trimmed_means``). The exact
     computation needs a per-group sort; this needs the same two-stage
     no-raw-shuffle plan as ``quantiles`` — scan-local partial sketches,
-    KB-sized sketch rows on the wire, one mapInPandas finalize — so it
-    holds at any group cardinality and 10^12 rows.
+    KB-sized sketch rows on the wire, then the quantile path's finalize
+    pass reading every group's means off the merged bucket arrays
+    (``_trimmed_walk``) — so it holds at any group cardinality and 10^12
+    rows.
 
     Returns [*by, trimmed_mean, winsorized_mean, count], unrounded
     doubles (gates round). Count-0 groups (all-NULL values) yield NULL
-    means like the CDF finalize. Estimates are within relative ~alpha of
+    means and count 0, like the CDF finalize. Estimates are within relative ~alpha of
     the exact means over the same rank cuts (every bucket representative
     is within alpha of the values it stands for).
 
@@ -1083,8 +1077,6 @@ def trimmed_means(
     leaf representative values are exp() of the two runtimes (JVM vs
     numpy), so kernel and sql agree at round-4, not bit-level — the same
     reassociation-dust caveat ``ddsketch_spark_sql`` documents."""
-    from pyspark.sql import types as T
-
     config = config or SketchConfig()
     if not (0.0 <= lo and 0.0 <= hi and lo + hi < 1.0):
         raise ValueError("trim fractions must satisfy 0 <= lo, hi and lo + hi < 1")
@@ -1100,38 +1092,10 @@ def trimmed_means(
         )
         return df.sparkSession.sql(sql, __ddsparkle_src__=df)
     partials = build_partial_sketches(df, value_col, key_cols, config, weight_col)
-    merged = merge_partials_to_sketch_rows(partials, key_cols)
-    key_fields = [merged.schema[c] for c in key_cols]
-    schema = T.StructType(
-        key_fields
-        + [
-            T.StructField("trimmed_mean", T.DoubleType()),
-            T.StructField("winsorized_mean", T.DoubleType()),
-            T.StructField("count", T.DoubleType()),
-        ]
+    return _finalize(
+        partials, key_cols, ["trimmed_mean", "winsorized_mean", "count"],
+        lambda w: _trimmed_walk(w, lo, hi),
     )
-    out_cols = key_cols + ["trimmed_mean", "winsorized_mean", "count"]
-
-    def fin(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for i in range(len(pdf)):
-                sk = row_to_sketch(pdf[SKETCH_ROW_FIELDS].iloc[i])
-                row = {c: pdf[c].iloc[i] for c in key_cols}
-                if sk.count > 0:
-                    tm, wm = sk.trimmed_means(lo, hi)
-                    row["trimmed_mean"] = tm
-                    row["winsorized_mean"] = wm
-                else:
-                    row["trimmed_mean"] = None
-                    row["winsorized_mean"] = None
-                row["count"] = float(sk.count)
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    return merged.mapInPandas(fin, schema=schema)
 
 
 def _catalyst_quantiles(df, value_col, key_cols, qs, q_names, config, weight_col):
@@ -1332,8 +1296,9 @@ def ddsketch_spark_sql(
       sums with Spark SUM vs the kernel's Kahan — same caveat. Both are
       exact on integer-valued data.
     - NaN values: Spark comparison semantics route NaN to the positive
-      store (NaN > x is TRUE in Spark SQL); the kernel routes them to the
-      zero bucket. Filter NaNs upstream if they can occur.
+      store (NaN > x is TRUE in Spark SQL); the kernel drops them like NULL
+      (``_make_builder``'s valid mask). Filter NaNs upstream if they can
+      occur.
     - collapse replicates the global clamp model
       (``CollapsingLowestDenseStoreTest.java:23-37``), like the kernel and
       the oracle.
@@ -1446,14 +1411,7 @@ def ddsketch_cdf_spark_sql(
     """
     config = config or SketchConfig(mapping_kind="log")
     key_cols = [by] if isinstance(by, str) else list(by or [])
-    xs = [float(x) for x in xs]
-    if any(math.isnan(x) for x in xs):
-        raise ValueError("NaN is not a valid CDF probe")
-    if x_names is None:
-        x_names = [cdf_column_name(x) for x in xs]
-    x_names = list(x_names)
-    if len(set(x_names)) != len(x_names):
-        raise ValueError(f"duplicate cdf column names: {x_names}")
+    xs, x_names = _cdf_probes(xs, x_names)
 
     fr = _sql_store_fragments(config, key_cols, value_col, weight_col)
     _d = fr["d"]
@@ -1502,7 +1460,7 @@ def sketch_rows_spark_sql(
     then per-cell ``collect_list``/``sort_array`` of at most ~#buckets tiny
     struct rows — no Arrow boundary, no Python workers anywhere).
 
-    The emitted rows round-trip through ``serde.row_to_sketch`` and merge
+    The emitted rows deserialize with the ``serde`` readers and merge
     with kernel-built rows (same mapping identity, same store layout:
     ascending indexes, zero-count bins dropped like ``Store.add`` no-ops).
 

@@ -517,13 +517,16 @@ def rollup_cdf(
     share of the window's values at or below each probe, per ``by`` group —
     'what fraction of last week's requests beat the 250 ms SLO per service'
     answered from the persisted rollup without touching raw data. Returns
-    [*by, *x_names, count] like ``agg.cdf_at_values``."""
-    from .agg import cdf_finalize_sketch_rows, merge_partials_to_sketch_rows
+    [*by, *x_names, count] like ``agg.cdf_at_values``: the cells go
+    straight into the kernel finalize pass (one exchange by ``by``, one
+    ``mapInPandas`` that merges and reads the CDF walk). A NaN probe
+    raises ``ValueError``."""
+    from .agg import _cdf_probes, _cdf_walk, _finalize
 
     key_cols = [by] if isinstance(by, str) else list(by or [])
+    xs, x_names = _cdf_probes(xs, x_names)
     sel = _apply_time_filter(rollup, start, end)
-    merged = merge_partials_to_sketch_rows(sel, key_cols)
-    return cdf_finalize_sketch_rows(merged, key_cols, xs, x_names)
+    return _finalize(sel, key_cols, [*x_names, "count"], lambda w: _cdf_walk(w, xs, x_names))
 
 
 def compact_payload_rollup(rollup, from_payload, granularity: str = "day"):

@@ -88,6 +88,31 @@ def test_cdf_nan_probe_propagates():
     assert np.isnan(out[1])
 
 
+@pytest.mark.spark
+def test_nan_probe_raises_on_every_spark_path(spark, sf_dir):
+    """A NaN probe is an error in every distributed CDF path — kernel, sql,
+    the SQL generator and rollup reads — not a NULL column on some of them.
+    (The scalar ``DDSketch.cdf_at_values`` keeps returning NaN.)"""
+    from ddsparkle.spark.agg import cdf_at_values, ddsketch_cdf_spark_sql
+    from ddsparkle.spark.rollup import build_rollup, rollup_cdf
+
+    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    cfg = SketchConfig(mapping_kind="log", track_exact_stats=False)
+    xs = [50.0, float("nan")]
+    roll = build_rollup(df, "value", by="event_type", config=cfg)
+    calls = [
+        lambda: cdf_at_values(df, "value", xs, by="event_type", config=cfg, mode="kernel"),
+        lambda: cdf_at_values(df, "value", xs, config=cfg, mode="kernel"),
+        lambda: cdf_at_values(df, "value", xs, by="event_type", config=cfg, mode="sql"),
+        lambda: ddsketch_cdf_spark_sql("t", "value", xs, config=cfg),
+        lambda: rollup_cdf(roll, xs, by="event_type"),
+        lambda: rollup_cdf(roll, xs),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="NaN is not a valid CDF probe"):
+            call().collect()
+
+
 def test_cdf_column_name_full_precision():
     from ddsparkle.spark.agg import cdf_column_name
 

@@ -47,19 +47,44 @@ def test_stage1_reads_no_extra_columns(spark, sf_dir):
 
 
 def test_full_query_single_shuffle_of_sketch_rows(spark, sf_dir):
+    """A kernel sketch query — quantiles, and CDF and trimmed means grouped
+    and keyless — is the stage-1 build, one sketch-row exchange and one
+    finalize: no separate merge pass in front of the finalize."""
+    from ddsparkle.spark.agg import cdf_at_values, trimmed_means
+
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    res = quantiles(df, "value", by="event_type", qs=(0.5,), mode="kernel")
+    for res in (
+        quantiles(df, "value", by="event_type", qs=(0.5,), mode="kernel"),
+        cdf_at_values(df, "value", [100.0], by="event_type", mode="kernel"),
+        cdf_at_values(df, "value", [100.0], mode="kernel"),
+        trimmed_means(df, "value", 0.1, 0.1, by="event_type", mode="kernel"),
+        trimmed_means(df, "value", 0.1, 0.1, mode="kernel"),
+    ):
+        plan = plan_of(res)
+        # exactly one exchange in the tree: the sketch-row shuffle before the
+        # vectorized finalize
+        assert plan.count("+- Exchange") == 1, plan
+        # build stage below the exchange, finalize stage above it: two
+        # MapInPandas operators (each printed in tree + detail section)
+        assert plan.count("MapInPandas") == 4, plan
+        # tree prints root-first: the finalize MapInPandas precedes the
+        # Exchange, the build MapInPandas follows it
+        assert plan.index("MapInPandas") < plan.index("+- Exchange")
+        assert plan.index("MapInPandas", plan.index("+- Exchange")) > plan.index("+- Exchange")
+
+
+def test_grouping_sets_one_exchange_per_set(spark, sf_dir):
+    """quantiles_grouping_sets finalizes every set straight from the
+    checkpointed finest rows: one exchange per set, no merge pass."""
+    import re
+
+    from ddsparkle.spark.agg import quantiles_grouping_sets
+
+    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    sets = [["event_type", "user_id"], ["event_type"], ["user_id"], []]
+    res = quantiles_grouping_sets(df, "value", ["event_type", "user_id"], sets=sets, qs=(0.5,))
     plan = plan_of(res)
-    # exactly one exchange in the tree: the sketch-row shuffle before the
-    # vectorized finalize
-    assert plan.count("+- Exchange") == 1, plan
-    # build stage below the exchange, finalize stage above it: two
-    # MapInPandas operators (each printed in tree + detail section)
-    assert plan.count("MapInPandas") == 4, plan
-    # tree prints root-first: the finalize MapInPandas precedes the
-    # Exchange, the build MapInPandas follows it
-    assert plan.index("MapInPandas") < plan.index("+- Exchange")
-    assert plan.index("MapInPandas", plan.index("+- Exchange")) > plan.index("+- Exchange")
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == len(sets), plan
 
 
 def test_sql_mode_plan_pure_jvm(spark, sf_dir):
@@ -139,14 +164,15 @@ def assert_one_finalize_over_one_exchange(plan: str):
 
 
 def test_stored_sketch_finalize_plan_shape(spark, sf_dir, tmp_path):
-    """rollup_quantiles (global and by key) and finalize_from_checkpoint
-    read stored sketch rows and finalize them in the same vectorized pass
-    as quantiles(mode='kernel')."""
+    """rollup_quantiles and rollup_cdf (global and by key) and
+    finalize_from_checkpoint read stored sketch rows and finalize them in
+    the same vectorized pass as quantiles(mode='kernel')."""
     from ddsparkle.config import SketchConfig
     from ddsparkle.spark.jobs import finalize_from_checkpoint
     from ddsparkle.spark.rollup import (
         build_rollup,
         read_rollup,
+        rollup_cdf,
         rollup_quantiles,
         write_rollup,
     )
@@ -159,6 +185,8 @@ def test_stored_sketch_finalize_plan_shape(spark, sf_dir, tmp_path):
     for res in (
         rollup_quantiles(roll, (0.5,)),
         rollup_quantiles(roll, (0.5,), by="event_type"),
+        rollup_cdf(roll, [100.0]),
+        rollup_cdf(roll, [100.0], by="event_type"),
         finalize_from_checkpoint(spark, str(tmp_path / "ck")),
         finalize_from_checkpoint(spark, str(tmp_path / "ck"), by="event_type"),
     ):

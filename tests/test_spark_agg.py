@@ -504,11 +504,10 @@ def test_wide_finalize_rejects_heterogeneous_configs(spark, sf_dir):
     a = build_partial_sketches(df, "value", ["event_type"], SketchConfig(mapping_kind="log", relative_accuracy=0.01))
     b = build_partial_sketches(df, "value", ["event_type"], SketchConfig(mapping_kind="log", relative_accuracy=0.02))
     mixed = a.unionByName(b)
-    from ddsparkle.spark.agg import _vectorized_grouped_finalize
+    from ddsparkle.spark.agg import _Walk
     pdf = mixed.toPandas()
     with pytest.raises(ValueError, match="not mergeable"):
-        _vectorized_grouped_finalize(pdf, ["event_type"], [0.5], ["q50"],
-                                     ["event_type", "q50", "count", "sum", "min", "max", "avg"])
+        _Walk(pdf, ["event_type"])
 
 
 # ---------------------------------------------------------------------------
@@ -708,6 +707,73 @@ def test_merged_rows_equal_scalar_fold(spark, policy, stats):
                 assert g["stat_sum"] == pytest.approx(
                     want["stat_sum"] - want["stat_sum_comp"], rel=1e-9
                 ), ctx
+
+
+@pytest.fixture
+def tiny_arrow_batches(spark):
+    """Arrow batches of 7 rows, so every kernel stage sees many batches."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    yield
+    spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("stats", [True, False], ids=["stats", "no-stats"])
+@pytest.mark.parametrize(
+    "policy", ["unbounded", "sparse", "collapsing_lowest", "collapsing_highest"]
+)
+def test_cdf_and_trimmed_walks_equal_scalar_reference(spark, policy, stats, tiny_arrow_batches):
+    """The kernel finalize's CDF and trimmed/winsorized walks equal the
+    scalar ``merge_rows(rows).cdf_at_values(xs)`` and ``.trimmed_means(lo,
+    hi)`` per key — by one key, two keys and keyless, with a NULL key, an
+    all-NULL group and a zero-weight group (count 0: NULL estimates).
+    Exactly when unweighted or with integral weights; to rel 1e-12 with
+    fractional weights, whose segment cumsum reassociates."""
+    from pyspark.sql import functions as F
+
+    from ddsparkle.spark.agg import cdf_at_values, cdf_column_name, trimmed_means
+
+    df = (
+        _mixed_sign_groups(spark)
+        .withColumn("k2", F.abs(F.hash("v")) % 3)
+        .withColumn("fw", F.col("w") * 0.37)
+        .repartition(3)
+    )
+    cfg = SketchConfig(mapping_kind="log", store_policy=policy, max_bins=8,
+                       track_exact_stats=stats)
+    xs = [-math.inf, -50.0, -1.0, 0.0, 0.5, 20.0, 1000.0, math.inf]
+    names = [cdf_column_name(x) for x in xs]
+    lo, hi = 0.1, 0.15
+    for w in (None, "w", "fw"):
+        for keys in (["k"], ["k", "k2"], []):
+            groups: dict = {}
+            for r in build_partial_sketches(df, "v", keys, cfg, w).collect():
+                groups.setdefault(tuple(r[c] for c in keys), []).append(r.asDict())
+            cdf = cdf_at_values(df, "v", xs, by=keys, config=cfg, weight_col=w, mode="kernel")
+            tm = trimmed_means(df, "v", lo, hi, by=keys, config=cfg, weight_col=w, mode="kernel")
+            got = {}
+            for res in (cdf, tm):
+                for r in res.collect():
+                    got.setdefault(tuple(r[c] for c in keys), {}).update(r.asDict())
+            assert set(got) == set(groups), (w, keys)
+            assert any(g["count"] == 0 for g in got.values()) == bool(keys)  # "n", "z"
+            for key, rows in groups.items():
+                sk, g = merge_rows(rows), got[key]
+                if sk.count > 0:
+                    want = dict(zip(names, sk.cdf_at_values(xs)))
+                    want["trimmed_mean"], want["winsorized_mean"] = sk.trimmed_means(lo, hi)
+                else:
+                    want = dict.fromkeys([*names, "trimmed_mean", "winsorized_mean"])
+                want["count"] = sk.count
+                for c, v in want.items():
+                    ctx = (w, keys, key, c)
+                    if v is None:
+                        assert g[c] is None, ctx
+                    elif w == "fw":
+                        assert g[c] == pytest.approx(v, rel=1e-12, abs=0.0), ctx
+                    else:
+                        assert g[c] == v, ctx
 
 
 def test_merge_rejects_mixed_exact_stats(spark):
