@@ -189,8 +189,9 @@ def ddsketch_trimmed_mean_sql(
     k_lo)`` clipped to [0, c]), and the dot ``sum(kept*val)`` folds
     LEFT-TO-RIGHT over ascending representative values starting from 0.0
     via ``list_reduce(list_prepend(0.0, list(... ORDER BY val)))`` — the
-    identical IEEE expression tree the kernel's Python loop evaluates, so
-    the means hash-match at round-4. Winsorized boundary values resolve
+    identical IEEE expression tree the scalar ``DDSketch.trimmed_means``
+    loop and the Spark kernel's ``np.bincount`` fold evaluate, so the
+    means hash-match at round-4. Winsorized boundary values resolve
     with the kernel's ``searchsorted(cum, r, 'right')`` convention: the
     first (ascending) bucket whose cumulative count exceeds the rank.
 

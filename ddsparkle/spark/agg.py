@@ -960,8 +960,7 @@ def ddsketch_trimmed_spark_sql(
     0.0D, (acc, x) -> acc + x.t)`` — over the ascending-value bucket walk,
     starting from 0.0: the identical IEEE expression tree the kernel's
     left-to-right ``np.bincount`` fold and the DuckDB twin's
-    ``list_reduce`` evaluate, so all
-    three paths agree at round-4. The HOF evaluates interpretively, but
+    ``list_reduce`` evaluate, so all three paths agree at round-4. The HOF evaluates interpretively, but
     only over per-group BUCKET arrays (~hundreds of elements at
     alpha=0.01), never per input row — the packing-fold cost class, not
     the per-shingle one.
