@@ -6,7 +6,7 @@ Layers:
   NumPy-vectorized sketch kernel (index mappings, bucket stores, DDSketch);
 - ``ddsparkle.serde`` — sketch <-> Spark-struct-row and binary codecs;
 - ``ddsparkle.spark`` — mergeable UDAF layer over DataFrames
-  (mapInPandas partial build, vectorized mapInPandas merge + quantile
+  (mapInArrow partial build, vectorized mapInArrow merge + quantile
   finalize) plus the transcript-analytics queries;
 - ``ddsparkle.sketches`` — the broader mergeable-sketch family (HLL,
   count-min, Bloom, ...) reusing the same aggregation chassis;

@@ -32,6 +32,32 @@ def converted_relative_accuracy(a_in: float, a_out: float) -> float:
     return (1.0 + a_in) * (1.0 + a_out) / (1.0 - a_in) - 1.0
 
 
+def _distribute(idx, cnt, in_mapping: IndexMapping, out_mapping: IndexMapping):
+    """Spread each input bin's count over the output bins it overlaps.
+    Returns ``(rep, out_j, share)``, one entry per (input bin, output bin)
+    overlap pair: the input bin's position, the output index and the
+    share of the count."""
+    lo = np.asarray(in_mapping.lower_bound(idx), np.float64)
+    hi = np.asarray(in_mapping.upper_bound(idx), np.float64)
+    # output bin range per input bin: from index(L_in) up to the first bin
+    # whose upper bound reaches U_in (index of U_in nudged one ulp down)
+    j_lo = out_mapping.index(lo)
+    j_hi = out_mapping.index(np.nextafter(hi, -np.inf))
+    j_hi = np.maximum(j_hi, j_lo)
+    k = (j_hi - j_lo + 1).astype(np.int64)
+    # expanded (input bin i, output bin j) pairs
+    rep = np.repeat(np.arange(idx.size), k)
+    # out_j = j_lo[i] + position-within-segment
+    within = np.arange(rep.size) - np.repeat(np.cumsum(k) - k, k)
+    out_j = np.repeat(j_lo, k) + within
+    L_out = np.asarray(out_mapping.lower_bound(out_j), np.float64)
+    U_out = np.asarray(out_mapping.upper_bound(out_j), np.float64)
+    lo_r, hi_r, cnt_r = lo[rep], hi[rep], cnt[rep]
+    overlap = np.minimum(U_out, hi_r) - np.maximum(L_out, lo_r)
+    overlap = np.clip(overlap, 0.0, None)
+    return rep, out_j, cnt_r * overlap / (hi_r - lo_r)
+
+
 def convert_store(
     store: BucketStore,
     in_mapping: IndexMapping,
@@ -42,29 +68,7 @@ def convert_store(
     out = BucketStore(policy, max_bins)
     if store.is_empty():
         return out
-    idx = store.indexes
-    cnt = store.counts
-    lo = np.asarray(in_mapping.lower_bound(idx), np.float64)
-    hi = np.asarray(in_mapping.upper_bound(idx), np.float64)
-    # output bin range per input bin: from index(L_in) up to the first bin
-    # whose upper bound reaches U_in (index of U_in nudged one ulp down)
-    j_lo = out_mapping.index(lo)
-    j_hi = out_mapping.index(np.nextafter(hi, -np.inf))
-    j_hi = np.maximum(j_hi, j_lo)
-    k = (j_hi - j_lo + 1).astype(np.int64)
-    total = int(k.sum())
-    # expanded (input bin i, output bin j) pairs
-    rep = np.repeat(np.arange(idx.size), k)
-    # out_j = j_lo[i] + position-within-segment
-    seg_starts = np.concatenate([[0], np.cumsum(k)[:-1]])
-    within = np.arange(total) - np.repeat(seg_starts, k)
-    out_j = np.repeat(j_lo, k) + within
-    L_out = np.asarray(out_mapping.lower_bound(out_j), np.float64)
-    U_out = np.asarray(out_mapping.upper_bound(out_j), np.float64)
-    lo_r, hi_r, cnt_r = lo[rep], hi[rep], cnt[rep]
-    overlap = np.minimum(U_out, hi_r) - np.maximum(L_out, lo_r)
-    overlap = np.clip(overlap, 0.0, None)
-    share = cnt_r * overlap / (hi_r - lo_r)
+    _, out_j, share = _distribute(store.indexes, store.counts, in_mapping, out_mapping)
     gi, gc = _group_sum(out_j, share)
     nz = gc != 0
     out.add(gi[nz], gc[nz])
@@ -99,33 +103,56 @@ def convert_sketch(
     return out
 
 
-def convert_sketch_rows(sketch_rows_df, new_mapping: IndexMapping, key_cols=()):
+def convert_sketch_rows(sketch_rows_df, new_mapping: IndexMapping):
     """Spark-level convert: re-bin a DataFrame of sketch rows (e.g. a
     checkpoint table built with one mapping) onto a different mapping —
-    an Arrow-batched pass, no raw data rescan. The common migration path
-    when an alpha or mapping choice changes after months of checkpoints."""
-    import pandas as pd
+    one ``mapInArrow`` pass, no raw data rescan. The common migration path
+    when an alpha or mapping choice changes after months of checkpoints.
 
-    from .serde import SKETCH_ROW_FIELDS, row_to_sketch, sketch_to_row
+    Every row converts like ``convert_sketch`` (store policy and bin limit
+    kept, zero count and exact stats carried over), and every column that
+    is not a sketch field is carried through, so the output schema is the
+    input's. The rows of a batch that share a sketch identity convert at
+    once: the sketch-row reader's bucket streams (one key id per row),
+    ``_distribute`` over both stores, ``_merge_buckets`` (the collapse
+    clamp) and the sketch-row writer."""
+    from .mapping import mapping_from_kind
+    from .serde import SKETCH_ROW_FIELDS
+    from .spark import agg
 
-    key_cols = list(key_cols)
-    schema = sketch_rows_df.schema
+    schema = agg._arrow_schema(sketch_rows_df.schema)
+    new_ident = dict(
+        mapping_kind=new_mapping.kind, gamma=new_mapping.gamma, index_offset=new_mapping.index_offset,
+    )
+
+    def convert(rows):
+        ident = {c: rows.column(c)[0].as_py() for c in agg._IDENTITY}
+        in_mapping = mapping_from_kind(
+            ident["mapping_kind"], ident["gamma"], ident["index_offset"]
+        )
+        kid, part, idx, cnt = agg._bucket_streams(rows, np.arange(rows.num_rows))
+        store = part != 1
+        rep, out_j, share = _distribute(idx[store], cnt[store], in_mapping, new_mapping)
+        kid, part = kid[store][rep], part[store][rep]
+        policy, max_bins = ident["store_policy"], ident["max_bins"]
+        buckets = agg._merge_buckets(kid, part, out_j, share, policy, max_bins)
+        # the zero count carries over, and so do exact stats; rows without
+        # them get the empty stats, like sketch_to_row
+        carried = {
+            c: rows.column(c)
+            for c in schema.names
+            if c not in SKETCH_ROW_FIELDS
+            or c == "zero_count"
+            or (ident["has_exact"] and c.startswith("stat_"))
+        }
+        stats = np.repeat(agg._EMPTY_STATS, rows.num_rows, axis=1)
+        return agg._sketch_rows_batch(schema, carried, {**ident, **new_ident}, *buckets, stats)
 
     def conv(batches):
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                sk = row_to_sketch(pdf[SKETCH_ROW_FIELDS].iloc[i])
-                out = convert_sketch(sk, new_mapping, sk.store_policy, sk.max_bins)
-                row = {c: pdf[c].iloc[i] for c in key_cols}
-                row.update(sketch_to_row(out))
-                for f in ("neg_idx", "neg_cnt", "pos_idx", "pos_cnt"):
-                    row[f] = row[f].tolist()
-                rows.append(row)
-            cols = key_cols + SKETCH_ROW_FIELDS
-            if not rows:
-                yield pd.DataFrame({c: pd.Series([], dtype=object) for c in cols})
-            else:
-                yield pd.DataFrame(rows, columns=cols)
+        for batch in batches:
+            # rows of different sketch identities convert apart
+            codes, first = agg._factorize_keys(batch, list(agg._IDENTITY))
+            for g in range(len(first)):
+                yield convert(batch.filter(codes == g))
 
-    return sketch_rows_df.mapInPandas(conv, schema=schema)
+    return sketch_rows_df.mapInArrow(conv, sketch_rows_df.schema)

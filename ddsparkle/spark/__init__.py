@@ -5,9 +5,9 @@ partial-aggregate pipeline, because grouped-map ``applyInPandas`` alone would
 shuffle raw rows (Catalyst's partial aggregation does not apply to
 grouped-map pandas UDFs):
 
-1. stage 1 — ``mapInPandas`` over the scan partitions builds one sketch per
+1. stage 1 — ``mapInArrow`` over the scan partitions builds one sketch per
    (task, group key): only *sketch rows* (a few KB each) ever shuffle;
-2. stage 2 — ``repartition(keys)`` plus one ``mapInPandas`` merges the
+2. stage 2 — ``repartition(keys)`` plus one ``mapInArrow`` merges the
    sketch rows and finalizes quantiles for every key of a partition in one
    vectorized pass;
 3. a global aggregation folds its partial rows on the driver, after an

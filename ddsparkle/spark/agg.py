@@ -4,11 +4,17 @@ The sketch is a distributive aggregate (partial = per-partition build, merge =
 store add, final = rank walk — ``DDSketch.java:218-229,268-273,353-388``),
 expressed here as a two-stage Arrow-vectorized pipeline:
 
-    stage 1  df.mapInPandas(build)          — no shuffle; one sketch row per
+    stage 1  df.mapInArrow(build)           — no shuffle; one sketch row per
                                               (task, group); pure NumPy inside
-    stage 2  repartition(keys).mapInPandas  — shuffles only sketch rows; every
+    stage 2  repartition(keys).mapInArrow   — shuffles only sketch rows; every
              (merge [+ finalize])             group of a partition merges (and
                                               rank-walks) in one vectorized pass
+
+Every stage reads and writes sketch rows as Arrow record batches through
+one reader (``_merge_sketch_rows``: list columns flattened with their row
+lengths, only the key columns through pandas) and one writer
+(``_sketch_rows_batch``: each list column one ``ListArray`` over a slice of
+the merged bucket stream), so no sketch row is converted cell by cell.
 
 Every Spark-side merge of sketch rows (the stage-1 flush, the merge down to
 one row per key, the global tree level and the finalize) runs one kernel,
@@ -36,6 +42,8 @@ from typing import Iterator, Optional, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from ..config import SketchConfig
 from ..serde import SKETCH_ROW_FIELDS, merge_rows, spark_sketch_schema
@@ -77,11 +85,12 @@ def build_partial_sketches(
     config: Optional[SketchConfig] = None,
     weight_col: Optional[str] = None,
 ):
-    """Stage 1: per-task, per-group sketch build via ``mapInPandas``.
+    """Stage 1: per-task, per-group sketch build via ``mapInArrow``.
 
     Consumes only ``key_cols + [value_col, weight_col]`` (column pruning
-    reaches the scan). Nulls and NaNs in the value column are skipped, like
-    SQL aggregates. Returns a DataFrame of ``key_cols`` + sketch struct
+    reaches the scan). NULLs and NaNs in the value column are skipped, like
+    SQL aggregates, and so are rows whose weight is NULL, NaN or zero.
+    Returns a DataFrame of ``key_cols`` + sketch struct
     fields, with at most (#tasks x #groups-per-task) rows and NO shuffle.
 
     One vectorized builder serves every shape; a keyless build is a single
@@ -98,8 +107,9 @@ def build_partial_sketches(
     key_cols = list(key_cols)
     cols = key_cols + [value_col] + ([weight_col] if weight_col else [])
     projected = df.select(*cols)
-    build = _make_builder(config, key_cols, value_col, weight_col)
-    return projected.mapInPandas(build, schema=_partial_schema(projected, key_cols))
+    schema = _partial_schema(projected, key_cols)
+    build = _make_builder(config, key_cols, value_col, weight_col, _arrow_schema(schema))
+    return projected.mapInArrow(build, schema)
 
 
 _INT32_MIN = -(2**31)
@@ -107,6 +117,7 @@ _INT32_MIN = -(2**31)
 _IDENTITY = ("mapping_kind", "gamma", "index_offset", "store_policy", "max_bins", "has_exact")
 # exact stats of a key with no values: count, sum, simple sum, min, max
 _EMPTY_STATS = np.array([[0.0], [0.0], [0.0], [math.inf], [-math.inf]])
+_STAT_FIELDS = ("stat_count", "stat_sum", "stat_simple_sum", "stat_min", "stat_max")
 
 
 def _pack(kid, part, idx):
@@ -120,21 +131,52 @@ def _unpack(packed):
     return packed >> 34, (packed >> 32) & 3, (packed & 0xFFFFFFFF) + _INT32_MIN
 
 
-def _factorize_keys(pdf, key_cols):
-    """Per-row key ids plus a frame of the distinct keys (one row per id);
-    NULL keys are a group. No key columns: every row is key 0."""
-    if not key_cols:
-        return np.zeros(len(pdf), np.int64), pd.DataFrame(index=range(1))
-    if len(key_cols) == 1:
-        codes, uniques = pd.factorize(pdf[key_cols[0]], use_na_sentinel=False)
-        keys = pd.DataFrame({key_cols[0]: uniques})
-    else:
-        codes, uniques = pd.factorize(
-            pd.MultiIndex.from_frame(pdf[key_cols]), use_na_sentinel=False
-        )
-        keys = uniques.to_frame(index=False)
-        keys.columns = key_cols
-    return codes.astype(np.int64), keys
+def _arrow_schema(schema):
+    """The Arrow form of a declared Spark schema: a ``mapInArrow`` stage
+    must emit exactly these types (Spark reads each column back by its
+    declared type, e.g. ``max_bins`` as int32)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(schema)
+
+
+def _doubles(col):
+    """A numeric Arrow column as float64 NumPy, NULL as NaN: Arrow keeps
+    NULL apart from NaN, where pandas merged them. Decimals go through
+    their exact digits, a correctly rounded parse like ``float(Decimal)``
+    (Arrow's direct cast can miss by an ulp)."""
+    if pa.types.is_decimal(col.type):
+        col = col.cast(pa.string())
+    return np.asarray(pc.fill_null(col.cast(pa.float64(), safe=False), math.nan))
+
+
+def _per_partition(df, schema, fn):
+    """``df.mapInArrow`` with declared ``schema``: all non-empty record
+    batches of a partition joined into one table, and ``fn(table,
+    arrow_schema)`` returns the partition's one output batch (an empty
+    partition gives none)."""
+    out = _arrow_schema(schema)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        batches = [b for b in batches if b.num_rows]
+        if batches:
+            yield fn(pa.Table.from_batches(batches), out)
+
+    return df.mapInArrow(run, schema)
+
+
+def _factorize_keys(table, key_cols):
+    """Per-row key ids, in order of first appearance, and the row at which
+    each key first appears; NULL keys are a group. Each key column goes
+    through ``pd.factorize``, several are combined pairwise. No key
+    columns: every row is key 0."""
+    codes = np.zeros(table.num_rows, np.int64)
+    for i, c in enumerate(key_cols):
+        col_codes, uniques = pd.factorize(table.column(c).to_pandas(), use_na_sentinel=False)
+        codes = pd.factorize(codes * len(uniques) + col_codes)[0] if i else col_codes
+    # a key appears first where the running maximum of the ids grows
+    first = np.flatnonzero(np.diff(np.maximum.accumulate(codes), prepend=-1))
+    return codes.astype(np.int64), first
 
 
 def _merge_buckets(kid, part, idx, cnt, policy, max_bins):
@@ -151,39 +193,50 @@ def _merge_buckets(kid, part, idx, cnt, policy, max_bins):
     return (*_unpack(packed), cnt)
 
 
-def _merge_sketch_frame(pdf, key_cols):
-    """Merge a frame of sketch rows to one sketch per key (one sketch when
-    ``key_cols`` is empty). Returns the arguments of ``_sketch_rows_frame``:
-    the distinct keys, the shared sketch identity, the ``_merge_buckets``
-    arrays and the (5, n_keys) exact stats (count, sum, simple sum, min,
-    max). The sum folds ``stat_sum - stat_sum_comp`` plainly, no Kahan."""
-    # one sketch config per merge: heterogeneous rows (e.g. checkpoints from
-    # two alphas unioned) fail loudly instead of mixing bucket spaces
-    for c in _IDENTITY:
-        if pdf[c].nunique(dropna=False) > 1:
-            raise ValueError(
-                f"sketch rows are not mergeable: heterogeneous {c!r} values "
-                f"{pdf[c].unique()[:4].tolist()}"
-            )
-    ident = {c: pdf[c].iloc[0] for c in _IDENTITY}
-    codes, keys = _factorize_keys(pdf, key_cols)
+def _bucket_streams(table, codes):
+    """The reader's bucket half: the negative stores, zero buckets and
+    positive stores of every sketch row as one (key id, part, index, count)
+    stream, each list column read with ``list_flatten`` and its row lengths
+    with ``list_value_length``; row i carries key id ``codes[i]``."""
 
-    def flat(part, col_idx, col_cnt):
-        lens = np.fromiter(map(len, pdf[col_idx]), np.int64, len(pdf))
-        idx = np.concatenate([np.asarray(x, np.int64) for x in pdf[col_idx]])
-        cnt = np.concatenate([np.asarray(x, np.float64) for x in pdf[col_cnt]])
-        kid = np.repeat(codes, lens)
+    def store(part, name):
+        lists = table.column(f"{name}_idx")
+        kid = np.repeat(codes, np.asarray(pc.list_value_length(lists)))
+        idx = np.asarray(pc.list_flatten(lists), np.int64)
+        cnt = _doubles(pc.list_flatten(table.column(f"{name}_cnt")))
         return kid, np.full(kid.size, part), idx, cnt
 
-    zero = (codes, np.ones_like(codes), np.zeros_like(codes), pdf["zero_count"].to_numpy(np.float64))
-    streams = [flat(0, "neg_idx", "neg_cnt"), zero, flat(2, "pos_idx", "pos_cnt")]
-    kid, part, idx, cnt = (np.concatenate(s) for s in zip(*streams))
-    buckets = _merge_buckets(kid, part, idx, cnt, ident["store_policy"], int(ident["max_bins"]))
+    zero = (codes, np.ones_like(codes), np.zeros_like(codes), _doubles(table.column("zero_count")))
+    return tuple(np.concatenate(s) for s in zip(store(0, "neg"), zero, store(2, "pos")))
+
+
+def _merge_sketch_rows(table, key_cols):
+    """The reader: merge a table of sketch rows to one sketch per key (one
+    sketch when ``key_cols`` is empty). Returns the arguments of
+    ``_sketch_rows_batch``: each key column's value at the key's first row,
+    the shared sketch identity, the ``_merge_buckets`` arrays and the (5,
+    n_keys) exact stats (count, sum, simple sum, min, max). The sum folds
+    ``stat_sum - stat_sum_comp`` plainly, no Kahan."""
+    # one sketch config per merge: heterogeneous rows (e.g. checkpoints from
+    # two alphas unioned) fail loudly instead of mixing bucket spaces
+    ident = {}
+    for c in _IDENTITY:
+        distinct = pc.unique(table.column(c))
+        if len(distinct) > 1:
+            raise ValueError(
+                f"sketch rows are not mergeable: heterogeneous {c!r} values "
+                f"{distinct[:4].to_pylist()}"
+            )
+        ident[c] = distinct[0].as_py()
+    codes, first = _factorize_keys(table, key_cols)
+    keys = {c: table.column(c).take(first).combine_chunks() for c in key_cols}
+    streams = _bucket_streams(table, codes)
+    buckets = _merge_buckets(*streams, ident["store_policy"], ident["max_bins"])
 
     def col(c):
-        return pdf[c].to_numpy(np.float64)
+        return _doubles(table.column(c))
 
-    stats = np.repeat(_EMPTY_STATS, len(keys), axis=1)
+    stats = np.repeat(_EMPTY_STATS, len(first), axis=1)
     np.add.at(stats[0], codes, col("stat_count"))
     np.add.at(stats[1], codes, col("stat_sum") - col("stat_sum_comp"))
     np.add.at(stats[2], codes, col("stat_simple_sum"))
@@ -192,51 +245,54 @@ def _merge_sketch_frame(pdf, key_cols):
     return keys, ident, *buckets, stats
 
 
-def _sketch_rows_frame(keys, ident, kid, part, idx, cnt, stats):
-    """One sketch row per key id: ``keys`` plus the ``SKETCH_ROW_FIELDS``
-    columns, each store array sliced out of the sorted ``_merge_buckets``
-    streams."""
-    n = len(keys)
-    bounds = np.searchsorted(kid * 3 + part, np.arange(3 * n + 1)).tolist()
-    neg, zero, pos, end = bounds[0:-1:3], bounds[1::3], bounds[2::3], bounds[3::3]
+def _record_batch(schema, n, cols):
+    """One record batch of ``schema`` (``n`` rows) from ``cols``: name ->
+    Arrow array, NumPy array or scalar. A NumPy NaN becomes NULL, as it did
+    on the way out of pandas."""
+    arrays = []
+    for f in schema:
+        v = cols[f.name]
+        if isinstance(v, np.ndarray):
+            v = pa.array(v, f.type, from_pandas=True)
+        elif not isinstance(v, pa.Array):
+            v = pa.repeat(pa.scalar(v, f.type), n)
+        arrays.append(v.cast(f.type))
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
-    def cells(a, starts, ends):
-        return [a[s:e] for s, e in zip(starts, ends)]
 
-    zero_count = np.zeros(n)
+def _sketch_rows_batch(schema, keys, ident, kid, part, idx, cnt, stats):
+    """The writer: one sketch row per key id, as a record batch of
+    ``schema``. ``keys`` maps each carried column to its Arrow array (a
+    carried sketch field replaces the one built here) and ``ident`` gives
+    the sketch identity; ``zero_count`` and the four list columns come
+    from the sorted ``_merge_buckets`` streams, each list column one
+    ``ListArray`` over its part's slice, with offsets from one
+    ``searchsorted`` of that part's key ids."""
+    n = stats.shape[1]
+    cols = dict(ident, zero_count=np.zeros(n), stat_sum_comp=0.0)
+    cols.update(zip(_STAT_FIELDS, stats))
     is_zero = part == 1
-    zero_count[kid[is_zero]] = cnt[is_zero]
-    return keys.reset_index(drop=True).assign(
-        mapping_kind=ident["mapping_kind"],
-        gamma=ident["gamma"],
-        index_offset=ident["index_offset"],
-        store_policy=ident["store_policy"],
-        max_bins=ident["max_bins"],
-        zero_count=zero_count,
-        neg_idx=cells(idx, neg, zero),
-        neg_cnt=cells(cnt, neg, zero),
-        pos_idx=cells(idx, pos, end),
-        pos_cnt=cells(cnt, pos, end),
-        stat_count=stats[0],
-        stat_sum=stats[1],
-        stat_sum_comp=0.0,
-        stat_simple_sum=stats[2],
-        stat_min=stats[3],
-        stat_max=stats[4],
-        has_exact=ident["has_exact"],
-    )
+    cols["zero_count"][kid[is_zero]] = cnt[is_zero]
+    for p, store in ((0, "neg"), (2, "pos")):
+        rows = part == p
+        offsets = pa.array(np.searchsorted(kid[rows], np.arange(n + 1)), pa.int32())
+        for c, values in ((f"{store}_idx", idx[rows]), (f"{store}_cnt", cnt[rows])):
+            cols[c] = pa.ListArray.from_arrays(offsets, values, type=schema.field(c).type)
+    return _record_batch(schema, n, {**cols, **keys})
 
 
-def _make_builder(cfg, key_cols, value_col, weight_col):
+def _make_builder(cfg, key_cols, value_col, weight_col, schema):
     """Vectorized stage 1: one packed-key aggregation per Arrow batch instead
     of per-group accept() calls, so Python cost is O(1) per batch however
     small the groups (e.g. grouping by conv_id, ~10 turns per conversation).
 
     Bucket counts accumulate as a ``_pack``ed stream summed with the same
     bincount/reduceat kernel the stores use; exact stats accumulate in a
-    (5, n_keys) array. A flush is ``_merge_buckets`` (the collapse clamp)
-    plus ``_sketch_rows_frame``. Memory stays bounded: if the stream or the
-    key count exceeds its cap, all current groups flush as mergeable rows.
+    (5, n_keys) array, and each key's columns are taken from the row where
+    the task first saw it. A flush is ``_merge_buckets`` (the collapse
+    clamp) plus ``_sketch_rows_batch``. Memory stays bounded: if the stream
+    or the key count exceeds its cap, all current groups flush as mergeable
+    rows. NULL and NaN values, and NULL, NaN and zero weights, are skipped.
     """
     mapping = cfg.mapping()
     min_idx_value = max(mapping.min_indexable_value, 0.0)
@@ -251,36 +307,39 @@ def _make_builder(cfg, key_cols, value_col, weight_col):
     )
 
     def empty_state():
-        # key -> key id, summed packed buckets and their counts, exact stats
-        return {}, np.empty(0, np.int64), np.empty(0, np.float64), _EMPTY_STATS[:, :0]
+        # key -> key id, the key rows in id order, summed packed buckets and
+        # their counts, exact stats
+        return {}, [], np.empty(0, np.int64), np.empty(0, np.float64), _EMPTY_STATS[:, :0]
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        key_to_id, acc_packed, acc_counts, stats = empty_state()
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        key_to_id, key_rows, acc_packed, acc_counts, stats = empty_state()
 
-        def emit() -> pd.DataFrame:
-            keys = pd.DataFrame(list(key_to_id), columns=key_cols)
+        def emit() -> pa.RecordBatch:
+            keys = {c: pa.concat_arrays([b.column(c) for b in key_rows]) for c in key_cols}
             stats[2] = stats[1]
             buckets = _merge_buckets(*_unpack(acc_packed), acc_counts, policy, max_bins)
-            return _sketch_rows_frame(keys, ident, *buckets, stats)
+            return _sketch_rows_batch(schema, keys, ident, *buckets, stats)
 
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            values = pdf[value_col].to_numpy(np.float64, na_value=np.nan)
-            weights = (
-                pdf[weight_col].to_numpy(np.float64, na_value=np.nan)
-                if weight_col
-                else np.ones(values.shape)
-            )
+            values = _doubles(batch.column(value_col))
+            weights = _doubles(batch.column(weight_col)) if weight_col else np.ones(values.shape)
             if weight_col and np.any(weights < 0):
                 raise ValueError("The count cannot be negative.")
             # batch-local factorize -> task-global key ids; keys register even
             # when every row is null so all-null groups survive (SQL groups)
-            codes, keys = _factorize_keys(pdf, key_cols)
-            uniq = keys.itertuples(index=False, name=None) if key_cols else [()]
+            codes, first = _factorize_keys(batch, key_cols)
+            local = batch.select(key_cols).take(first)
+            uniq = zip(*(c.to_pylist() for c in local.columns)) if key_cols else [()]
+            n_before = len(key_to_id)
             local_to_global = np.fromiter(
-                (key_to_id.setdefault(k, len(key_to_id)) for k in uniq), np.int64, len(keys)
+                (key_to_id.setdefault(k, len(key_to_id)) for k in uniq), np.int64, len(first)
             )
+            # each new id's first row, in id order
+            ids, at = np.unique(local_to_global, return_index=True)
+            if ids[-1] >= n_before:
+                key_rows.append(local.take(at[ids >= n_before]))
             if len(key_to_id) > 1 << 29:
                 # _pack reserves 29 bits for the key id; the flush cap keeps
                 # tasks far below this, but fail loudly rather than wrap
@@ -297,16 +356,10 @@ def _make_builder(cfg, key_cols, value_col, weight_col):
                     raise ValueError(
                         "The input value is outside the range that is tracked by the sketch."
                     )
-                pos = v > min_idx_value
-                neg = v < -min_idx_value
-                part = np.ones(v.size, np.int64)
+                # both stores index |v|; the zero bucket is part 1, index 0
+                part = np.where(v > min_idx_value, 2, np.where(v < -min_idx_value, 0, 1))
                 idx = np.zeros(v.size, np.int64)
-                if pos.any():
-                    part[pos] = 2
-                    idx[pos] = mapping.index(v[pos])
-                if neg.any():
-                    part[neg] = 0
-                    idx[neg] = mapping.index(-v[neg])
+                idx[part != 1] = mapping.index(np.abs(v[part != 1]))
                 acc_packed, acc_counts = _group_sum(
                     np.concatenate([acc_packed, _pack(kid, part, idx)]),
                     np.concatenate([acc_counts, w]),
@@ -318,7 +371,7 @@ def _make_builder(cfg, key_cols, value_col, weight_col):
                     np.maximum.at(stats[4], kid, v)
             if acc_packed.size > tuple_cap or len(key_to_id) > max_groups:
                 yield emit()
-                key_to_id, acc_packed, acc_counts, stats = empty_state()
+                key_to_id, key_rows, acc_packed, acc_counts, stats = empty_state()
         if key_to_id:
             yield emit()
 
@@ -441,13 +494,10 @@ def quantiles(
     # table, which Spark keeps as a LocalRelation: collecting it runs no
     # job (a list of rows would become an RDD scan), and NaN stays NaN (a
     # pandas frame would turn it into null).
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     schema = _finalize_schema(partials, [], [*q_names, *_STAT_COLS])
     rows = partials.collect()
     out = [finalize_row(merge_rows(rows), {}, qs, q_names)] if rows else []
-    table = pa.Table.from_pylist(out, schema=to_arrow_schema(schema))
+    table = pa.Table.from_pylist(out, schema=_arrow_schema(schema))
     return df.sparkSession.createDataFrame(table, schema)
 
 
@@ -489,41 +539,37 @@ def finalize_sketch_rows(src, group_keys: Sequence[str], qs: Sequence[float], q_
 
 def _finalize(src, group_keys: Sequence[str], cols: Sequence[str], walk):
     """The one kernel finalize: repartition sketch rows by ``group_keys``
-    (to one partition when there are none), then ONE ``mapInPandas`` in
+    (to one partition when there are none), then ONE ``mapInArrow`` in
     which every key of a partition merges and is laid out in walk order
     (``_Walk``) at once, and ``walk`` reads every key's answer off those
     arrays — so per-key Python cost is ~zero. ``walk`` maps a ``_Walk`` to
-    one array per output column; returns ``[*group_keys, *cols]``."""
+    one array per output column; the keys and those columns leave as one
+    record batch (NaN answers as NULL). Returns ``[*group_keys, *cols]``."""
     group_keys = list(group_keys)
     cols = list(cols)
     parted = _by_key(src, group_keys)
 
-    def finalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pdfs = [p for p in batches if len(p)]
-        if pdfs:
-            w = _Walk(pd.concat(pdfs, ignore_index=True), group_keys)
-            yield w.keys.assign(**walk(w))[group_keys + cols]
+    def finalize(table, out):
+        w = _Walk(table, group_keys)
+        return _record_batch(out, len(w.totals), {**w.keys, **walk(w)})
 
-    return parted.mapInPandas(finalize, schema=_finalize_schema(parted, group_keys, cols))
+    return _per_partition(parted, _finalize_schema(parted, group_keys, cols), finalize)
 
 
 def merge_partials_within_partitions(partials, key_cols: Sequence[str]):
     """Fold the sketch rows of each partition (no shuffle) to one row per
-    (partition, key) with the vectorized merge (``_merge_sketch_frame``).
+    (partition, key) with the vectorized merge (``_merge_sketch_rows``).
     Returns ``[*key_cols, *SKETCH_ROW_FIELDS]``."""
     key_cols = list(key_cols)
 
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pdfs = [p for p in batches if len(p)]
-        if pdfs:
-            pdf = pd.concat(pdfs, ignore_index=True)
-            yield _sketch_rows_frame(*_merge_sketch_frame(pdf, key_cols))
+    def fold(table, out):
+        return _sketch_rows_batch(out, *_merge_sketch_rows(table, key_cols))
 
-    return partials.mapInPandas(fold, schema=_partial_schema(partials, key_cols))
+    return _per_partition(partials, _partial_schema(partials, key_cols), fold)
 
 
 class _Walk:
-    """Every key of a sketch-row frame merged (``_merge_sketch_frame``) and
+    """Every key of a sketch-row table merged (``_merge_sketch_rows``) and
     laid out for the rank walk: one partition-wide array per bucket field,
     each key's buckets contiguous in walk order — negative store by
     descending index, zero bucket, positive store by ascending index, i.e.
@@ -534,10 +580,10 @@ class _Walk:
     bucket mass has ``totals`` 0; every walk gives it NaN (NULL) answers.
     """
 
-    def __init__(self, pdf, key_cols):
+    def __init__(self, table, key_cols):
         from ..mapping import mapping_from_kind
 
-        self.keys, ident, kid, part, idx, counts, self.stats = _merge_sketch_frame(pdf, key_cols)
+        self.keys, ident, kid, part, idx, counts, self.stats = _merge_sketch_rows(table, key_cols)
         self.has_exact = bool(ident["has_exact"])
         mapping = mapping_from_kind(
             ident["mapping_kind"], float(ident["gamma"]), float(ident["index_offset"])
@@ -554,7 +600,7 @@ class _Walk:
         self.kid, self.values, self.counts = kid, values, counts
 
         # one segment per key that has buckets; keys without any are absent
-        n_keys = len(self.keys)
+        n_keys = self.stats.shape[1]
         self.seg_starts = np.flatnonzero(np.diff(kid, prepend=-1))
         self.seg_kids = kid[self.seg_starts]
         self.seg_ends = np.append(self.seg_starts, kid.size)[1:] - 1
@@ -651,23 +697,15 @@ def _trimmed_walk(w, lo, hi):
 
 def _clamp_per_group(kid, idx, policy, max_bins):
     """Segmented collapse clamp: per (group, store) bound from the group's
-    extreme index."""
+    extreme index (one ``ufunc.at`` over a lookup indexed by group)."""
     if idx.size == 0:
         return idx
-    order = np.argsort(kid, kind="stable")
-    k_sorted = kid[order]
-    starts = np.nonzero(np.concatenate([[True], k_sorted[1:] != k_sorted[:-1]]))[0]
-    if policy == "collapsing_lowest":
-        seg_ext = np.maximum.reduceat(idx[order], starts)
-    else:
-        seg_ext = np.minimum.reduceat(idx[order], starts)
-    seg_keys = k_sorted[starts]
-    lookup = np.zeros(int(kid.max()) + 1, np.int64)
-    lookup[seg_keys] = seg_ext
-    ext = lookup[kid]
-    if policy == "collapsing_lowest":
-        return np.maximum(idx, ext - max_bins + 1)
-    return np.minimum(idx, ext + max_bins - 1)
+    lowest = policy == "collapsing_lowest"
+    ext = np.full(int(kid.max()) + 1, _INT32_MIN if lowest else -_INT32_MIN)
+    (np.maximum if lowest else np.minimum).at(ext, kid, idx)
+    if lowest:
+        return np.maximum(idx, ext[kid] - max_bins + 1)
+    return np.minimum(idx, ext[kid] + max_bins - 1)
 
 
 def quantiles_multi(
@@ -805,7 +843,7 @@ def cdf_at_values(
     two hash aggregates, no Python (``ddsketch_cdf_spark_sql``); 'kernel'
     is the Arrow-vectorized partial-sketch path (required for interpolated
     mappings): partial sketches per task, then the quantile path's finalize
-    pass (one exchange, one ``mapInPandas``) reading every key's CDF off
+    pass (one exchange, one ``mapInArrow``) reading every key's CDF off
     the merged bucket arrays (``_cdf_walk``).
 
     Returns [*by, *x_names, count]; a count-0 group's cdf columns are NULL.
@@ -1065,6 +1103,14 @@ def trimmed_means(
     means and count 0, like the CDF finalize. Estimates are within relative ~alpha of
     the exact means over the same rank cuts (every bucket representative
     is within alpha of the values it stands for).
+
+    With fractional weights the total ``n`` is a float sum whose last bits
+    depend on summation order (partial merge order, partitioning), so
+    where ``lo*n`` or ``hi*n`` should be a whole number the cuts
+    ``floor(lo*n)`` and ``floor(hi*n)`` can move by one rank and the means
+    by a whole bucket: on sf0.01 ``events`` with weights in thirds they
+    moved by up to 10.6% between two merge orders. Integer weights cut
+    exactly.
 
     ``mode``: 'sql' (the 'auto' default for stats-less log configs) runs
     the whole thing as a pure-Catalyst plan — bucket hash aggregate +

@@ -519,7 +519,7 @@ def rollup_cdf(
     answered from the persisted rollup without touching raw data. Returns
     [*by, *x_names, count] like ``agg.cdf_at_values``: the cells go
     straight into the kernel finalize pass (one exchange by ``by``, one
-    ``mapInPandas`` that merges and reads the CDF walk). A NaN probe
+    ``mapInArrow`` that merges and reads the CDF walk). A NaN probe
     raises ``ValueError``."""
     from .agg import _cdf_probes, _cdf_walk, _finalize
 

@@ -65,12 +65,12 @@ def test_full_query_single_shuffle_of_sketch_rows(spark, sf_dir):
         # vectorized finalize
         assert plan.count("+- Exchange") == 1, plan
         # build stage below the exchange, finalize stage above it: two
-        # MapInPandas operators (each printed in tree + detail section)
-        assert plan.count("MapInPandas") == 4, plan
-        # tree prints root-first: the finalize MapInPandas precedes the
-        # Exchange, the build MapInPandas follows it
-        assert plan.index("MapInPandas") < plan.index("+- Exchange")
-        assert plan.index("MapInPandas", plan.index("+- Exchange")) > plan.index("+- Exchange")
+        # MapInArrow operators (each printed in tree + detail section)
+        assert plan.count("MapInArrow") == 4, plan
+        # tree prints root-first: the finalize MapInArrow precedes the
+        # Exchange, the build MapInArrow follows it
+        assert plan.index("MapInArrow") < plan.index("+- Exchange")
+        assert plan.index("MapInArrow", plan.index("+- Exchange")) > plan.index("+- Exchange")
 
 
 def test_grouping_sets_one_exchange_per_set(spark, sf_dir):
@@ -124,7 +124,7 @@ def test_auto_mode_routes_log_to_sql_and_cubic_to_kernel(spark, sf_dir):
     # global cubic: kernel path; the default finalize is driver-side, so
     # assert on the build-stage plan via a grouped call instead
     grouped = quantiles(df, "value", by="event_type", qs=(0.5,), config=cubic_cfg)
-    assert "MapInPandas" in plan_of(grouped)
+    assert "MapInArrow" in plan_of(grouped)
 
 
 def test_sql_mode_sketch_query_one_scan_two_exchanges(spark, sf_dir):
@@ -154,12 +154,12 @@ def test_sql_mode_sketch_query_one_scan_two_exchanges(spark, sf_dir):
 
 
 def assert_one_finalize_over_one_exchange(plan: str):
-    """A sketch-row finalize: one MapInPandas directly above the plan's only
+    """A sketch-row finalize: one MapInArrow directly above the plan's only
     Exchange (each operator prints in the tree and in the detail section),
     and no grouped-map Python operator."""
     assert plan.count("+- Exchange") == 1, plan
-    assert plan.count("MapInPandas") == 2, plan
-    assert plan.index("MapInPandas") < plan.index("+- Exchange"), plan
+    assert plan.count("MapInArrow") == 2, plan
+    assert plan.index("MapInArrow") < plan.index("+- Exchange"), plan
     assert "FlatMapGroupsInPandas" not in plan, plan
 
 
@@ -191,6 +191,37 @@ def test_stored_sketch_finalize_plan_shape(spark, sf_dir, tmp_path):
         finalize_from_checkpoint(spark, str(tmp_path / "ck"), by="event_type"),
     ):
         assert_one_finalize_over_one_exchange(plan_of(res))
+
+
+def test_kernel_sketch_stages_run_in_arrow(spark, sf_dir, tmp_path):
+    """Every kernel sketch-row stage (build, merge, finalize, convert) is a
+    MapInArrow: no MapInPandas in the plans of the kernel operators."""
+    from ddsparkle.config import SketchConfig
+    from ddsparkle.convert import convert_sketch_rows
+    from ddsparkle.mapping import CubicallyInterpolatedMapping
+    from ddsparkle.spark.agg import cdf_at_values, quantiles_grouping_sets, trimmed_means
+    from ddsparkle.spark.jobs import finalize_from_checkpoint
+    from ddsparkle.spark.rollup import build_rollup, compact_rollup, rollup_cdf, rollup_quantiles
+
+    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    cfg = SketchConfig(track_exact_stats=False)
+    roll = build_rollup(df, "value", by="event_type", config=cfg, mode="kernel")
+    partials = build_partial_sketches(df, "value", ["event_type"], cfg)
+    partials.write.parquet(str(tmp_path / "ck"))
+    for res in (
+        quantiles(df, "value", by="event_type", qs=(0.5,), mode="kernel"),
+        cdf_at_values(df, "value", [100.0], by="event_type", mode="kernel"),
+        trimmed_means(df, "value", 0.1, 0.1, by="event_type", mode="kernel"),
+        roll,
+        compact_rollup(roll, "day"),
+        rollup_quantiles(roll, (0.5,), by="event_type"),
+        rollup_cdf(roll, [100.0], by="event_type"),
+        quantiles_grouping_sets(df, "value", ["event_type"]),
+        finalize_from_checkpoint(spark, str(tmp_path / "ck"), by="event_type"),
+        convert_sketch_rows(partials, CubicallyInterpolatedMapping.from_relative_accuracy(0.02)),
+    ):
+        plan = plan_of(res)
+        assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
 
 
 def test_payload_fold_plan_shape(spark, sf_dir, tmp_path):

@@ -228,13 +228,87 @@ def test_partials_then_merge_equals_direct(spark, sf_dir):
 
 
 def test_nulls_skipped(spark):
+    """NULL and NaN values, NULL, NaN and zero weights are skipped on the
+    Arrow input of every kernel build, while their groups (a NULL key, an
+    all-NULL group) survive with count 0: kernel quantiles, cdf_at_values,
+    trimmed_means and build_rollup + rollup_quantiles, keyless and by key,
+    equal a scalar sketch of the rows that carry weight; an empty input
+    gives no rows."""
     from pyspark.sql import functions as F
+
+    from ddsparkle.spark.agg import cdf_at_values, cdf_column_name, trimmed_means
+    from ddsparkle.spark.rollup import build_rollup, rollup_quantiles
 
     df = spark.range(100).select(
         F.when(F.col("id") % 10 == 0, None).otherwise(F.col("id").cast("double")).alias("v")
     )
     res = quantiles(df, "v", qs=(0.5,)).collect()[0]
     assert res["count"] == 90
+
+    nan = math.nan
+    rng = np.random.default_rng(5)
+    rows = [
+        (k, float(v), float(w))
+        for k in ("a", "b", None)
+        for v, w in zip(rng.normal(0.0, 50.0, 40).round(2), rng.integers(1, 4, 40))
+    ]
+    rows += [("a", nan, 1.0), ("b", None, 2.0), (None, 3.5, None), ("a", 7.0, nan), ("b", 9.0, 0.0)]
+    rows += [("n", None, 1.0), ("n", nan, 1.0), ("n", 4.0, 0.0), ("n", 5.0, None)]
+    schema = "k string, v double, w double"
+    data = spark.createDataFrame(rows, schema).withColumn("ts", F.lit("2024-01-01").cast("timestamp"))
+    empty = data.where(F.lit(False))
+    cfg = SketchConfig()
+    qs, xs = (0.1, 0.5, 0.9), [-20.0, 0.0, 35.5]
+    q_names, x_names = [quantile_column_name(q) for q in qs], [cdf_column_name(x) for x in xs]
+    for by in (["k"], []):
+        want = {}
+        for key in {r[0] for r in rows} if by else [None]:
+            kept = [
+                (v, w) for k, v, w in rows
+                if (not by or k == key) and v is not None and w is not None
+                and not (math.isnan(v) or math.isnan(w)) and w > 0
+            ]
+            sk = cfg.new_sketch()
+            if kept:
+                sk.accept(*map(np.array, zip(*kept)))
+            exp = finalize_row(sk, {}, qs, q_names)
+            if sk.count > 0:
+                exp.update(zip(x_names, sk.cdf_at_values(xs)))
+                exp["trimmed_mean"], exp["winsorized_mean"] = sk.trimmed_means(0.1, 0.2)
+            else:
+                exp = {c: (0.0 if c == "count" else None) for c in exp}
+                exp.update(dict.fromkeys([*x_names, "trimmed_mean", "winsorized_mean"]))
+            want[(key,) if by else ()] = exp
+        roll = build_rollup(data, "v", time_col="ts", granularity="day", by=by, config=cfg,
+                            weight_col="w", mode="kernel")
+        for res, cols in (
+            (quantiles(data, "v", by=by, qs=qs, config=cfg, weight_col="w", mode="kernel"),
+             [*q_names, "count", "min", "max"]),
+            (rollup_quantiles(roll, qs, by=by), [*q_names, "count", "min", "max"]),
+            (cdf_at_values(data, "v", xs, by=by, config=cfg, weight_col="w", mode="kernel"),
+             [*x_names, "count"]),
+            (trimmed_means(data, "v", 0.1, 0.2, by=by, config=cfg, weight_col="w", mode="kernel"),
+             ["trimmed_mean", "winsorized_mean", "count"]),
+        ):
+            got = {tuple(r[c] for c in by): r.asDict() for r in res.collect()}
+            assert set(got) == set(want), (by, cols)
+            for key, exp in want.items():
+                for c in cols:
+                    g = got[key][c]
+                    assert g == exp[c] or (exp[c] is None and (g is None or math.isnan(g))), (
+                        by, key, c, g, exp[c]
+                    )
+            for key, exp in want.items():
+                if "sum" in got[key] and exp["count"] > 0:
+                    assert got[key]["sum"] == pytest.approx(exp["sum"], rel=1e-12), (by, key)
+        for res in (
+            quantiles(empty, "v", by=by, qs=qs, config=cfg, weight_col="w", mode="kernel"),
+            cdf_at_values(empty, "v", xs, by=by, config=cfg, weight_col="w", mode="kernel"),
+            trimmed_means(empty, "v", 0.1, 0.2, by=by, config=cfg, weight_col="w", mode="kernel"),
+            rollup_quantiles(build_rollup(empty, "v", time_col="ts", granularity="day", by=by,
+                                          config=cfg, weight_col="w", mode="kernel"), qs, by=by),
+        ):
+            assert res.collect() == [], by
 
 
 def test_empty_input(spark):
@@ -395,6 +469,56 @@ def test_convert_sketch_rows_spark(spark, sf_dir):
     assert sk.count == pytest.approx(len(vals), rel=1e-9)
 
 
+def test_convert_sketch_rows_equals_per_row_convert(spark):
+    """convert_sketch_rows converts every row like the scalar
+    ``convert_sketch(row_to_sketch(row), ...)`` and carries every other
+    column through: a keyed frame with a NULL key, mixed signs and zeros,
+    with and without exact stats, under collapsing policies that clamp
+    after the re-binning, and two sketch identities in one frame. Indexes,
+    zero counts, identity and stats are exact, counts within rel 1e-12
+    (the clamp sums collapsed shares in another order)."""
+    from pyspark.sql import functions as F
+
+    from ddsparkle.convert import convert_sketch, convert_sketch_rows
+    from ddsparkle.mapping import CubicallyInterpolatedMapping
+    from ddsparkle.serde import row_to_sketch, sketch_to_row
+
+    df = _mixed_sign_groups(spark)
+    frames = []
+    for name, cfg in (
+        ("low", SketchConfig(mapping_kind="log", store_policy="collapsing_lowest", max_bins=8)),
+        ("high", SketchConfig(mapping_kind="quad", store_policy="collapsing_highest", max_bins=8,
+                              track_exact_stats=False)),
+        ("unbounded", SketchConfig(mapping_kind="log", relative_accuracy=0.05,
+                                   store_policy="unbounded", max_bins=0)),
+    ):
+        partials = build_partial_sketches(df, "v", ["k"], cfg, "w")
+        frames.append(merge_partials_to_sketch_rows(partials, ["k"]).withColumn("src", F.lit(name)))
+    rows = frames[0].unionByName(frames[1]).unionByName(frames[2]).repartition(2).localCheckpoint()
+    new_mapping = CubicallyInterpolatedMapping.from_relative_accuracy(0.01)
+    converted = convert_sketch_rows(rows, new_mapping)
+    assert converted.schema == rows.schema
+    got = {(r["src"], r["k"]): r.asDict() for r in converted.collect()}
+    want = {(r["src"], r["k"]): r.asDict() for r in rows.collect()}
+    assert set(got) == set(want) and (None in {k for _, k in got})
+    for key, r in want.items():
+        exp = sketch_to_row(convert_sketch(row_to_sketch(r), new_mapping, r["store_policy"], r["max_bins"]))
+        g = got[key]
+        for f in SKETCH_ROW_FIELDS:
+            if f in ("neg_cnt", "pos_cnt"):
+                assert g[f] == pytest.approx(np.asarray(exp[f]).tolist(), rel=1e-12, abs=0.0), (key, f)
+            elif f in ("neg_idx", "pos_idx"):
+                assert g[f] == np.asarray(exp[f]).tolist(), (key, f)
+            else:
+                assert g[f] == exp[f], (key, f)
+    # the clamp really acts: some collapsing store re-bins to more than 8 bins
+    assert any(
+        max(len(st.indexes) for st in (sk.negative_store, sk.positive_store)) > 8
+        for (src, _), r in want.items() if src != "unbounded"
+        for sk in [convert_sketch(row_to_sketch(r), new_mapping)]
+    )
+
+
 def test_composite_group_keys(spark, sf_dir):
     """Multi-column by: the MultiIndex factorize paths of the vectorized
     builder and finalize."""
@@ -505,9 +629,8 @@ def test_wide_finalize_rejects_heterogeneous_configs(spark, sf_dir):
     b = build_partial_sketches(df, "value", ["event_type"], SketchConfig(mapping_kind="log", relative_accuracy=0.02))
     mixed = a.unionByName(b)
     from ddsparkle.spark.agg import _Walk
-    pdf = mixed.toPandas()
     with pytest.raises(ValueError, match="not mergeable"):
-        _Walk(pdf, ["event_type"])
+        _Walk(mixed.toArrow(), ["event_type"])
 
 
 # ---------------------------------------------------------------------------
