@@ -117,13 +117,14 @@ def convert_sketch_rows(sketch_rows_df, new_mapping: IndexMapping):
     ``_distribute`` over both stores, ``_merge_buckets`` (the collapse
     clamp) and the sketch-row writer."""
     from .mapping import mapping_from_kind
-    from .serde import SKETCH_ROW_FIELDS
     from .spark import agg
 
     schema = agg._arrow_schema(sketch_rows_df.schema)
-    new_ident = dict(
-        mapping_kind=new_mapping.kind, gamma=new_mapping.gamma, index_offset=new_mapping.index_offset,
-    )
+    m = new_mapping
+    new_ident = dict(mapping_kind=m.kind, gamma=m.gamma, index_offset=m.index_offset)
+    # what a conversion rebuilds; every other column (zero count and exact
+    # stats included) carries over
+    rebuilt = {*new_ident, "neg_idx", "neg_cnt", "pos_idx", "pos_cnt"}
 
     def convert(rows):
         ident = {c: rows.column(c)[0].as_py() for c in agg._IDENTITY}
@@ -136,15 +137,9 @@ def convert_sketch_rows(sketch_rows_df, new_mapping: IndexMapping):
         kid, part = kid[store][rep], part[store][rep]
         policy, max_bins = ident["store_policy"], ident["max_bins"]
         buckets = agg._merge_buckets(kid, part, out_j, share, policy, max_bins)
-        # the zero count carries over, and so do exact stats; rows without
-        # them get the empty stats, like sketch_to_row
-        carried = {
-            c: rows.column(c)
-            for c in schema.names
-            if c not in SKETCH_ROW_FIELDS
-            or c == "zero_count"
-            or (ident["has_exact"] and c.startswith("stat_"))
-        }
+        carried = {c: rows.column(c) for c in schema.names if c not in rebuilt}
+        if not ident["has_exact"]:  # the empty stats, like sketch_to_row
+            carried = {c: a for c, a in carried.items() if not c.startswith("stat_")}
         stats = np.repeat(agg._EMPTY_STATS, rows.num_rows, axis=1)
         return agg._sketch_rows_batch(schema, carried, {**ident, **new_ident}, *buckets, stats)
 

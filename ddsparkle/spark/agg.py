@@ -247,11 +247,14 @@ def _merge_sketch_rows(table, key_cols):
 
 def _record_batch(schema, n, cols):
     """One record batch of ``schema`` (``n`` rows) from ``cols``: name ->
-    Arrow array, NumPy array or scalar. A NumPy NaN becomes NULL, as it did
-    on the way out of pandas."""
+    Arrow array, NumPy array or scalar. Every float NaN leaves as NULL, as
+    it did on the way out of pandas (a float key that merged NULL and NaN
+    rows reads NULL, whichever came first)."""
     arrays = []
     for f in schema:
         v = cols[f.name]
+        if isinstance(v, pa.Array) and pa.types.is_floating(v.type):
+            v = v.to_numpy(zero_copy_only=False)
         if isinstance(v, np.ndarray):
             v = pa.array(v, f.type, from_pandas=True)
         elif not isinstance(v, pa.Array):

@@ -233,7 +233,8 @@ def test_nulls_skipped(spark):
     all-NULL group) survive with count 0: kernel quantiles, cdf_at_values,
     trimmed_means and build_rollup + rollup_quantiles, keyless and by key,
     equal a scalar sketch of the rows that carry weight; an empty input
-    gives no rows."""
+    gives no rows. A float key's NULL and NaN rows are one group whose key
+    reads NULL, as on the pandas path."""
     from pyspark.sql import functions as F
 
     from ddsparkle.spark.agg import cdf_at_values, cdf_column_name, trimmed_means
@@ -246,6 +247,10 @@ def test_nulls_skipped(spark):
     assert res["count"] == 90
 
     nan = math.nan
+    # a float key's NaN and NULL rows are one group whose key reads NULL
+    fk = spark.createDataFrame([(nan, 1.0), (None, 2.0), (1.0, 3.0)], "fk double, v double")
+    got = quantiles(fk.coalesce(1), "v", by="fk", qs=(0.5,), mode="kernel").collect()
+    assert {r["fk"]: r["count"] for r in got} == {None: 2.0, 1.0: 1.0}
     rng = np.random.default_rng(5)
     rows = [
         (k, float(v), float(w))
